@@ -14,12 +14,10 @@ instead of recomputing the lost partitions. That is the wrong default for
 the 100 TB design point, so this module centralizes the policy:
 
 - :func:`materialize_small` — for small, **deterministic** intermediates.
-  Default mode ``persist`` keeps full lineage (``MEMORY_AND_DISK``): an
-  executor loss recomputes only the lost partitions; the consumer plan
-  shows the subtree under ``InMemoryRelation`` (cached lineage — it
-  executes once, see tools/scan_audit.py). Set session conf
-  ``spark.lakehouse.smallIntermediate.mode=localCheckpoint`` to restore
-  the round-6 behavior (marginally cheaper re-planning; single-node only).
+  ``persist`` keeps full lineage (``MEMORY_AND_DISK``): an executor loss
+  recomputes only the lost partitions; the consumer plan shows the
+  subtree under ``InMemoryRelation`` (cached lineage — it executes once,
+  see tools/scan_audit.py).
 
 - :func:`truncate_lineage` — for intermediates where lineage truncation is
   itself the point: iterative algorithms whose plans grow per round
@@ -33,17 +31,13 @@ the 100 TB design point, so this module centralizes the policy:
 
 Deployment note (100 TB): call ``sc.setCheckpointDir("s3a://.../ckpt")``
 (or an HDFS path) in cluster jobs so every lineage truncation in this
-package is executor-loss-safe; leave the small-intermediate mode at its
-``persist`` default.
+package is executor-loss-safe.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
-
-#: Session conf selecting how small deterministic intermediates are pinned.
-SMALL_INTERMEDIATE_MODE = "spark.lakehouse.smallIntermediate.mode"
 
 #: Pins created by :func:`materialize_small`, per application id — the
 #: release ledger behind :func:`release_small_pins` (round 15, VERDICT
@@ -84,16 +78,9 @@ def materialize_small(df: DataFrame) -> DataFrame:
     """Pin a small, deterministic, multiply-referenced intermediate so its
     upstream executes once instead of once per downstream reference.
 
-    Modes (session conf ``spark.lakehouse.smallIntermediate.mode``):
-
-    ``persist`` (default, cluster-safe)
-        ``persist(StorageLevel.MEMORY_AND_DISK)`` — lineage retained, so a
-        lost executor recomputes only its partitions. Lazy: the first
-        action populates the cache.
-    ``localCheckpoint``
-        Round-6 behavior: lineage truncated into executor-local blocks
-        (``Scan ExistingRDD`` in consumer plans). Not fault-tolerant;
-        acceptable only on single-node deployments.
+    ``persist(StorageLevel.MEMORY_AND_DISK)`` (cluster-safe): lineage
+    retained, so a lost executor recomputes only its partitions. Lazy: the
+    first action populates the cache.
 
     Only DETERMINISTIC plans may use this helper: persist recomputes lost
     partitions from lineage, so nondeterministic lineage (``rand()``,
@@ -107,14 +94,6 @@ def materialize_small(df: DataFrame) -> DataFrame:
     — noise that can mask a real cache-eviction signal in bench tails —
     so an already-persisted input is returned as-is.
     """
-    mode = df.sparkSession.conf.get(SMALL_INTERMEDIATE_MODE, "persist")
-    if mode == "localCheckpoint":
-        return df.localCheckpoint(eager=False)
-    if mode != "persist":
-        raise ValueError(
-            f"{SMALL_INTERMEDIATE_MODE}={mode!r}: expected 'persist' or "
-            "'localCheckpoint'"
-        )
     if df.storageLevel != StorageLevel.NONE:
         return df
     out = df.persist(StorageLevel.MEMORY_AND_DISK)

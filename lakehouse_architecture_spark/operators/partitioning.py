@@ -203,7 +203,7 @@ def compaction_assignments(
     computed the same (total-of-ties) prior and collapsed into ONE bin
     regardless of target size. Ties order arbitrarily within a run
     (callers wanting reproducible layouts compose a unique tiebreak into
-    ``order_col``, as VersionedTable._bin_tagged does with the file
+    ``order_col``, as table_format.plan_tagged_bins does with the file
     name); unique keys are unaffected (ROWS == RANGE)."""
     w = Window.orderBy(F.col(order_col).asc()).rowsBetween(
         Window.unboundedPreceding, Window.currentRow

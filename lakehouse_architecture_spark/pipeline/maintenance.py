@@ -55,6 +55,7 @@ def compact_table(
 
     from lakehouse_architecture_spark.pipeline.table_format import (
         plan_tagged_bins,
+        swap_in,
         write_bins_flat,
     )
 
@@ -116,17 +117,18 @@ def compact_table(
             # plan + execute each partition independently (a single global
             # plan would put rows of every partition value in every task)
             total_written += rewrite(dest, src)
-            shutil.rmtree(dest)
-            os.rename(src, dest)
+            # swap_in parks the old copy as a "."-prefixed sibling inside
+            # the table dir, which Spark's listing skips: it never reads
+            # as an extra partition value, even after a crash mid-swap
+            swap_in(src, dest)
         shutil.rmtree(tmp, ignore_errors=True)
         return total_written
 
     target = path.rstrip("/")  # rename() rejects a trailing-slash target
-    # stage to a temp sibling then swap — keeps readers from seeing a
-    # half-compacted table (a transactional format makes this atomic)
+    # stage to a temp sibling then swap_in — readers never see a
+    # half-compacted table, and a crash mid-swap never deletes it
     n_files = rewrite(target, tmp)
-    shutil.rmtree(target)
-    os.rename(tmp, target)
+    swap_in(tmp, target)
     return n_files
 
 

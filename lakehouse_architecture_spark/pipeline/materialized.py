@@ -73,18 +73,10 @@ class MaterializedAggregate:
     # -- state --------------------------------------------------------------
     def refreshed_through(self) -> int | None:
         """Highest source version folded into the view (epoch markers)."""
-        import os
-
-        best: int | None = None
-        for v in self.view.versions():
-            marker = os.path.join(self.view._vdir(v), "_epoch")
-            try:
-                with open(marker) as f:
-                    e = int(f.read().strip())
-            except (OSError, ValueError):
-                continue
-            best = e if best is None else max(best, e)
-        return best
+        return max(
+            (int(e) for e in self.view.epochs().values() if e.isdigit()),
+            default=None,
+        )
 
     # -- aggregation --------------------------------------------------------
     def _agg(self, df: DataFrame, sign: int = 1) -> DataFrame:
@@ -194,12 +186,12 @@ class MaterializedAggregate:
         #   is never exchanged.
         # * big view + big churn → shuffled fold (delta not broadcastable).
         view = self.read()
-        view_bytes = self._snapshot_bytes(self.view)
+        view_bytes = self.view.snapshot_bytes()
         # the snapshot-diff fallback has no feed on disk, so feed bytes
         # would read 0 there no matter how big the delta is — never let
         # that path force a broadcast of a potentially table-sized delta
         churn_bytes = sum(
-            self._feed_bytes(self.source, v) for v in range(done + 1, latest + 1)
+            self.source.feed_bytes(v) for v in range(done + 1, latest + 1)
         )
         big_view = view_bytes > self.BIG_VIEW_BYTES
         small_churn = feeds_usable and churn_bytes <= self.SMALL_CHURN_BYTES
@@ -257,38 +249,3 @@ class MaterializedAggregate:
         # full snapshot write, NOT a merge: groups whose count reached zero
         # must disappear, and a merge would keep them (unmatched targets)
         return self.view.write(merged, epoch=latest)
-
-    @staticmethod
-    def _snapshot_bytes(table: VersionedTable) -> int:
-        """On-disk bytes of the latest snapshot (driver-side stat)."""
-        import os
-
-        v = table.latest_version()
-        if v is None:
-            return 0
-        total = 0
-        d = table._vdir(v)
-        for root, _dirs, files in os.walk(d):
-            if "_changes" in root:
-                continue
-            total += sum(
-                os.path.getsize(os.path.join(root, f))
-                for f in files
-                if not f.startswith(("_", "."))
-            )
-        return total
-
-    @staticmethod
-    def _feed_bytes(table: VersionedTable, version: int) -> int:
-        """On-disk bytes of a version's change feed (driver-side stat)."""
-        import os
-
-        d = os.path.join(table._vdir(version), "_changes")
-        total = 0
-        for root, _dirs, files in os.walk(d):
-            total += sum(
-                os.path.getsize(os.path.join(root, f))
-                for f in files
-                if not f.startswith(("_", "."))
-            )
-        return total

@@ -1,4 +1,4 @@
-"""Table-format abstraction: Delta/Iceberg when available, parquet fallback.
+"""Table-format abstraction and the engine's one directory commit protocol.
 
 The north star names Delta/Iceberg (transactional MERGE, time travel,
 compaction). Their jars are not in this environment, so the engine exposes
@@ -6,21 +6,118 @@ one interface with two implementations:
 
 * ``delta`` — used automatically when the delta-spark package and jars are
   importable: transactional writes and a real ``MERGE INTO``.
-* ``parquet`` — snapshot semantics: MERGE = anti-join + union + atomic-ish
-  directory overwrite (operators/upsert). Correct, replay-idempotent, and
-  what the tests exercise here.
+* ``parquet`` — snapshot semantics: MERGE = anti-join + union
+  (operators/upsert) written to a staged sibling directory, then published.
+  Correct, replay-idempotent, and what the tests exercise here.
 
 ``resolve_format()`` picks at runtime; callers never branch.
+
+Commit protocol. Every write in the package that makes a directory
+visible by rename (``ManagedTable.merge``, ``VersionedTable`` commits,
+``pipeline.maintenance.compact_table``, the streaming upsert and
+versioned sinks, which commit through those two classes, and the cached
+fixture copies in ``queries/storage.py``) stages its output in a sibling
+directory and publishes it through exactly one of two helpers here:
+
+* :func:`swap_in` — replace an existing directory: rename target aside to
+  the hidden sibling ``.<name>__old-<token>``, rename staged into place,
+  then remove the old copy. A crash between the renames leaves the old
+  copy under that name, never a half-written or deleted table; the
+  leading "." keeps Spark's file listing from reading it as data (or, for
+  a partition directory, as an extra partition value).
+* :func:`publish_once` — create-if-absent: rename staged into place, or
+  discard it and return False when the target already exists (the loser
+  of a race keeps the winner's copy).
+
+Both rely on POSIX ``rename`` being atomic, which holds for local paths
+only; on an object store a rename is copy + delete, so ``ManagedTable``
+overwrites ``scheme://`` paths after truncating lineage instead, and a
+Hadoop-FileSystem commit is the planned replacement. ``VersionedTable``
+additionally owns what it writes next to its data (``_schema.json``,
+``_changes/``, the ``_epoch`` marker) and how those are read back.
 """
 
 from __future__ import annotations
 
+import json
+import os
+import shutil
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from lakehouse_architecture_spark.materialize import truncate_lineage
 
 from lakehouse_architecture_spark.operators.upsert import merge_upsert
+
+
+def swap_in(staged: str, target: str) -> None:
+    """Replace directory ``target`` with ``staged``: rename target aside,
+    rename staged into place, then delete the old copy. Never
+    rmtree-then-rename, which leaves NO table if the process dies between
+    the two steps; here a crash between the renames leaves the old copy
+    recoverable as ``.<name>__old-<token>`` next to ``target``. The "."
+    prefix hides it from Spark's file listing, so neither a reader
+    between the renames nor one after a crash sees the old rows twice —
+    under a ``<col>=<v>`` partition directory a visible name would read
+    as one more partition value. A failed first rename discards
+    ``staged`` and leaves ``target`` untouched; a failed second rename
+    moves the old copy back."""
+    head, name = os.path.split(target)
+    old = os.path.join(head, f".{name}__old-{uuid.uuid4().hex[:12]}")
+    try:
+        os.rename(target, old)
+    except OSError:
+        shutil.rmtree(staged, ignore_errors=True)
+        raise
+    try:
+        os.rename(staged, target)
+    except OSError:
+        os.rename(old, target)
+        shutil.rmtree(staged, ignore_errors=True)
+        raise
+    shutil.rmtree(old)
+
+
+def publish_once(staged: str, target: str) -> bool:
+    """Rename ``staged`` to ``target`` unless ``target`` exists; returns
+    False (and discards ``staged``) when another writer got there first.
+    The rename itself closes the check-then-rename window: renaming onto
+    a non-empty directory fails. The pre-check covers an EMPTY target,
+    which a directory rename would silently replace."""
+    if not os.path.exists(target):
+        try:
+            os.rename(staged, target)
+            return True
+        except OSError:
+            if not os.path.exists(target):
+                shutil.rmtree(staged, ignore_errors=True)
+                raise
+    shutil.rmtree(staged, ignore_errors=True)
+    return False
+
+
+def _stash(path: str, value) -> None:
+    """Write one JSON sidecar (a schema stash) into a staged directory."""
+    with open(path, "w") as f:
+        json.dump(value, f)
+
+
+def _data_bytes(d: str) -> int:
+    """Bytes of the data files under ``d``: "_"/"."-prefixed files
+    (stashes, markers, checksums) and "_"-prefixed subtrees (a snapshot's
+    ``_changes``) are not data."""
+    total = 0
+    for root, dirs, files in os.walk(d):
+        dirs[:] = [x for x in dirs if not x.startswith("_")]
+        total += sum(
+            os.path.getsize(os.path.join(root, f))
+            for f in files
+            if not f.startswith(("_", "."))
+        )
+    return total
 
 
 def plan_tagged_bins(
@@ -132,8 +229,6 @@ def write_bins_flat(tagged: DataFrame, cols: list[str], out_dir: str) -> None:
     so the table schema is unchanged). One Spark job plus
     bin-cardinality driver renames."""
     import glob
-    import os
-    import shutil
 
     staging = out_dir.rstrip("/") + "__opt"
     try:
@@ -269,25 +364,13 @@ class ManagedTable:
             merged = truncate_lineage(merged, eager=True)
             self.overwrite(merged)
             return
-        # Local path: write to a temp sibling, then swap via two renames —
-        # never rmtree-then-rename, which leaves NO table at all if the
-        # process dies between the two steps. After "rename target → old",
-        # a crash leaves the old dir recoverable by hand; after
-        # "rename tmp → target" the table is complete. Per-writer uuid tmp
+        # Local path: stage a sibling, then swap_in. Per-writer uuid tmp
         # names, same rationale as VersionedTable._commit: a shared name
         # would let two racing merges overwrite each other's staged data.
-        import os
-        import shutil
-        import uuid
-
-        token = uuid.uuid4().hex[:12]
         target = self.path.rstrip("/")
-        tmp = f"{target}__merging-{token}"
-        old = f"{target}__old-{token}"
+        tmp = f"{target}__merging-{uuid.uuid4().hex[:12]}"
         merged.write.format(self.format).mode("overwrite").save(tmp)
-        os.rename(target, old)
-        os.rename(tmp, target)
-        shutil.rmtree(old)
+        swap_in(tmp, target)
 
 
 class VersionedTable:
@@ -317,7 +400,6 @@ class VersionedTable:
 
     # -- version bookkeeping ------------------------------------------------
     def versions(self) -> list[int]:
-        import os
         import re
 
         if not os.path.isdir(self.path):
@@ -334,9 +416,44 @@ class VersionedTable:
         return vs[-1] if vs else None
 
     def _vdir(self, v: int) -> str:
-        import os
-
         return os.path.join(self.path, f"v={v}")
+
+    def epochs(self) -> dict[int, str]:
+        """Version -> ``_epoch`` marker text, for versions committed with
+        one (streaming sinks stamp their epoch, materialized views the
+        source version they folded in)."""
+        out = {}
+        for v in self.versions():
+            try:
+                with open(os.path.join(self._vdir(v), "_epoch")) as f:
+                    out[v] = f.read().strip()
+            except OSError:
+                continue
+        return out
+
+    def snapshot_bytes(self) -> int:
+        """On-disk data bytes of the latest version (0 when the table is
+        empty) — a driver-side stat, no Spark job."""
+        v = self.latest_version()
+        return 0 if v is None else _data_bytes(self._vdir(v))
+
+    def feed_bytes(self, version: int) -> int:
+        """On-disk data bytes of ``version``'s change feed (0 if none)."""
+        return _data_bytes(os.path.join(self._vdir(version), "_changes"))
+
+    def _reader(self, stash: str, key: str | None = None):
+        """``spark.read`` with a schema stashed by :meth:`_commit` applied,
+        so Spark skips the parquet footer-inference job; snapshots written
+        before the stash existed, or a corrupt stash, fall back to
+        inference."""
+        try:
+            with open(stash) as f:
+                raw = json.load(f)
+            return self.spark.read.schema(
+                StructType.fromJson(raw if key is None else raw[key])
+            )
+        except (OSError, ValueError, KeyError, TypeError):
+            return self.spark.read
 
     # -- reads --------------------------------------------------------------
     def read(self, version: int | None = None) -> DataFrame:
@@ -344,30 +461,16 @@ class VersionedTable:
         stashed at commit time when present (skips the parquet
         footer-inference job — fixed driver cost on every read); snapshots
         written before the stash existed fall back to inference."""
-        import json
-        import os
-
         v = self.latest_version() if version is None else version
         if v is None or v not in self.versions():
             raise FileNotFoundError(f"{self.path}: no version {version!r}")
         d = self._vdir(v)
-        r = self.spark.read
-        sp = os.path.join(d, "_schema.json")
-        if os.path.exists(sp):
-            from pyspark.sql.types import StructType
-
-            try:
-                with open(sp) as f:
-                    r = r.schema(StructType.fromJson(json.load(f)))
-            except (OSError, ValueError, KeyError):
-                r = self.spark.read  # corrupt stash: fall back to inference
-        return r.parquet(d)
+        return self._reader(os.path.join(d, "_schema.json")).parquet(d)
 
     def history(self) -> list[dict]:
         """One record per version: number, commit mtime, file count/bytes.
         Filesystem metadata only — no data scan."""
         import glob
-        import os
 
         out = []
         for v in self.versions():
@@ -393,10 +496,6 @@ class VersionedTable:
         enforce_constraints: bool = False,
         stage=None,
     ) -> int:
-        import os
-        import shutil
-        import uuid
-
         # per-writer tmp dir: a shared name would let two racing writers
         # overwrite each other's staged data before either renames
         tmp = self._vdir(v) + f"__tmp-{uuid.uuid4().hex[:12]}"
@@ -440,26 +539,17 @@ class VersionedTable:
             pre, post = changes
             pre.write.mode("overwrite").parquet(os.path.join(tmp, "_changes", "pre"))
             post.write.mode("overwrite").parquet(os.path.join(tmp, "_changes", "post"))
-            # stash the schemas so change_feed() readers skip parquet
-            # footer inference (two driver round-trips per refresh)
-            import json as _json
-
-            with open(os.path.join(tmp, "_changes", "_schemas.json"), "w") as f:
-                _json.dump(
-                    {"pre": pre.schema.jsonValue(), "post": post.schema.jsonValue()},
-                    f,
-                )
-        # stash the snapshot schema alongside the data (same trick as the
-        # change feed's _schemas.json): read() can then hand Spark the
-        # schema up front and skip the footer-inference job — ~0.1-0.2 s
-        # of fixed driver cost per read at the local job floor, paid by
-        # EVERY consumer (IVM refresh, time travel, CDC) otherwise.
-        # Per-version by construction, so schema evolution stays correct:
+            _stash(
+                os.path.join(tmp, "_changes", "_schemas.json"),
+                {"pre": pre.schema.jsonValue(), "post": post.schema.jsonValue()},
+            )
+        # stash the snapshot schema alongside the data: read() (via
+        # _reader) hands Spark the schema up front and skips the
+        # footer-inference job — ~0.1-0.2 s of fixed driver cost per read
+        # at the local job floor, paid by EVERY consumer (IVM refresh,
+        # time travel, CDC) otherwise. Per-version by construction, so
         # time travel sees the schema as of each version.
-        import json as _sjson
-
-        with open(os.path.join(tmp, "_schema.json"), "w") as f:
-            _sjson.dump(df.schema.jsonValue(), f)
+        _stash(os.path.join(tmp, "_schema.json"), df.schema.jsonValue())
         if epoch is not None:
             # provenance marker staged INSIDE the tmp dir so the atomic
             # rename commits data + marker together (streaming sinks use
@@ -467,18 +557,8 @@ class VersionedTable:
             # to parquet readers)
             with open(os.path.join(tmp, "_epoch"), "w") as f:
                 f.write(str(epoch))
-        if v in self.versions():  # lost a concurrent commit race
-            shutil.rmtree(tmp)
+        if not publish_once(tmp, self._vdir(v)):  # lost a commit race
             raise FileExistsError(f"{self.path}: version {v} already committed")
-        try:
-            # atomic loser detection: rename onto an existing (non-empty)
-            # version dir fails, closing the check-then-rename window
-            os.rename(tmp, self._vdir(v))
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise FileExistsError(
-                f"{self.path}: version {v} already committed"
-            ) from None
         return v
 
     # -- CHECK constraints (Delta `delta.constraints` parity) ---------------
@@ -491,17 +571,11 @@ class VersionedTable:
         committed snapshots were checked by their own writes, and a
         schema-evolving merge must not fail because old rows null-fill a
         new constrained column."""
-        import json
-        import os
-
         os.makedirs(self.path, exist_ok=True)
         with open(os.path.join(self.path, "_constraints.json"), "w") as f:
             json.dump(constraints, f, indent=1, sort_keys=True)
 
     def check_constraints(self) -> dict[str, str]:
-        import json
-        import os
-
         p = os.path.join(self.path, "_constraints.json")
         if not os.path.exists(p):
             return {}
@@ -596,32 +670,15 @@ class VersionedTable:
         ``-pre + post`` over consecutive versions telescopes: each pre is
         the prior version's values, so multi-version deltas compose by
         simple union."""
-        import os
-
         d = os.path.join(self._vdir(version), "_changes")
         if not os.path.isdir(os.path.join(d, "pre")):
             return None
-        schemas = {}
-        sp = os.path.join(d, "_schemas.json")
-        if os.path.exists(sp):
-            import json
-
-            from pyspark.sql.types import StructType
-
-            try:
-                with open(sp) as f:
-                    raw = json.load(f)
-                schemas = {k: StructType.fromJson(v) for k, v in raw.items()}
-            except (OSError, ValueError, KeyError):
-                schemas = {}  # fall back to footer inference
-
-        def rd(side: str) -> DataFrame:
-            r = self.spark.read
-            if side in schemas:
-                r = r.schema(schemas[side])
-            return r.parquet(os.path.join(d, side))
-
-        return (rd("pre"), rd("post"))
+        stash = os.path.join(d, "_schemas.json")
+        pre, post = (
+            self._reader(stash, side).parquet(os.path.join(d, side))
+            for side in ("pre", "post")
+        )
+        return pre, post
 
     def restore(self, version: int) -> int:
         """Delta RESTORE semantics: re-commit an old snapshot as the NEW
@@ -675,21 +732,6 @@ class VersionedTable:
             df = df.coalesce(target_files)
         return self._commit(df, latest + 1)
 
-    def _bin_tagged(
-        self,
-        snapshot: DataFrame,
-        sizes: dict[str, int],
-        order_col: str | None,
-        target_bytes: int,
-    ) -> tuple[DataFrame, int]:
-        """Tag every snapshot row with its file's compaction bin — a
-        thin wrapper over the shared :func:`plan_tagged_bins` (also the
-        seam the wide-manifest plan-boundedness guard in
-        tests/test_maintenance.py drives)."""
-        return plan_tagged_bins(
-            self.spark, snapshot, sizes, order_col, target_bytes
-        )
-
     def optimize(
         self,
         target_bytes: int = 128 * 1024 * 1024,
@@ -726,7 +768,6 @@ class VersionedTable:
         from local fs metadata, manifest-cardinality by nature.
         """
         import glob
-        import os
 
         latest = self.latest_version()
         if latest is None:
@@ -765,20 +806,15 @@ class VersionedTable:
             clustered = zorder_cluster(
                 snapshot, list(zorder_by), n_bins, zorder_bits
             )
+            return self._commit(clustered.select(*cols), latest + 1), n_bins
+        tagged, n_bins = plan_tagged_bins(
+            self.spark, snapshot, sizes, order_col, target_bytes
+        )
 
-            def stage(tmp: str) -> None:
-                clustered.select(*cols).write.mode("overwrite").parquet(tmp)
+        def stage(tmp: str) -> None:
+            write_bins_flat(tagged, cols, tmp)
 
-        else:
-            tagged, n_bins = self._bin_tagged(
-                snapshot, sizes, order_col, target_bytes
-            )
-
-            def stage(tmp: str) -> None:
-                write_bins_flat(tagged, cols, tmp)
-
-        v = self._commit(snapshot, latest + 1, stage=stage)
-        return v, n_bins
+        return self._commit(snapshot, latest + 1, stage=stage), n_bins
 
     def vacuum(self, keep_last: int = 1, tmp_min_age_s: float = 3600.0) -> list[int]:
         """Drop all but the newest ``keep_last`` versions (and crashed
@@ -789,8 +825,6 @@ class VersionedTable:
         maintenance job from deleting the staging dir of a writer that is
         mid-commit right now — which would kill that writer's rename."""
         import glob
-        import os
-        import shutil
         import time
 
         if keep_last < 1:

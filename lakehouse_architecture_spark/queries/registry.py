@@ -256,92 +256,16 @@ def _verification_history(repo: str | None = None) -> dict[str, tuple[int, int]]
     return hist
 
 
-def _stale_names(
-    module_mtime: dict[str, float],
-    green_record_mtime: dict[str, float],
-    slack_sec: float = 60.0,
-) -> set[str]:
-    """Names whose defining module was edited AFTER the driver record that
-    last verified them green (round 9, r7 directive #8): such queries'
-    green history describes code that no longer exists, so they re-enter
-    the 50-query window the round they change instead of waiting out the
-    age-based rotation. ``slack_sec`` absorbs checkout/clone skew, where
-    every file's mtime lands within seconds of every other's — a fresh
-    clone must NOT mark the whole registry stale (that would freeze the
-    rotation at declared order). Pure function; the fs glue is in
-    :func:`_rotation_order`."""
-    return {
-        name
-        for name, mt in module_mtime.items()
-        if name in green_record_mtime
-        and mt > green_record_mtime[name] + slack_sec
-    }
-
-
 def _rotation_order(specs: tuple[QuerySpec, ...]) -> list[QuerySpec]:
     hist = _verification_history()
-    stale = _edited_since_green(specs, hist)
 
     def key(s: QuerySpec):
         # never-green first (the driver has NO evidence about them at
-        # all), edited-while-claimed-green second, then least/oldest
-        # green. Round 11: stale used to outrank never-green, but a round
-        # that edits a few large query modules marks dozens of entries
-        # stale and floods the window, pushing never-verified queries out
-        # indefinitely — the one state the window must never allow.
+        # all), then least/oldest green
         n, last = hist.get(s.name, (0, -2))
-        if s.name in stale and (n, last) != (0, -2):
-            n, last = 0, -1
         return (n, last, specs.index(s))
 
     return sorted(specs, key=key)
-
-
-def _edited_since_green(
-    specs: tuple[QuerySpec, ...],
-    hist: dict[str, tuple[int, int]],
-    repo: str | None = None,
-) -> set[str]:
-    """Filesystem glue for :func:`_stale_names`: per green spec, the mtime
-    of the module defining its builder vs the mtime of the
-    ``CORRECTNESS_r{last_green}.json`` that vouched for it. Any failure
-    (missing file, odd module) degrades to not-stale — rotation falls back
-    to the age-based order rather than erroring."""
-    import glob
-    import os
-    import re
-    import sys
-
-    if repo is None:
-        repo = os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        )
-    round_mtime: dict[int, float] = {}
-    for path in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")):
-        m = re.search(r"_r(\d+)\.json$", path)
-        if m:
-            try:
-                round_mtime[int(m.group(1))] = os.path.getmtime(path)
-            except OSError:
-                continue
-    module_mtime: dict[str, float] = {}
-    green_record_mtime: dict[str, float] = {}
-    for s in specs:
-        if s.name not in hist:
-            continue
-        _n, last = hist[s.name]
-        if last not in round_mtime:
-            continue
-        try:
-            mod = sys.modules.get(s.build.__module__)
-            src = getattr(mod, "__file__", None)
-            if not src:
-                continue
-            module_mtime[s.name] = os.path.getmtime(src)
-        except OSError:
-            continue
-        green_record_mtime[s.name] = round_mtime[last]
-    return _stale_names(module_mtime, green_record_mtime)
 
 
 ALL_QUERIES: dict[str, QuerySpec] = {

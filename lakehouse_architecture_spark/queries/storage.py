@@ -20,13 +20,13 @@ from pyspark.sql import functions as F
 from lakehouse_architecture_spark.queries.base import QuerySpec, tables
 
 
-def _source_fingerprint(sf_dir: str) -> str:
-    """Digest of the `part` fixture's file names, sizes, and mtimes: if the
-    fixture is regenerated in place, the key changes and a fresh clustered
-    copy is written instead of silently reusing a stale layout."""
+def _source_fingerprint(sf_dir: str, table: str) -> str:
+    """Digest of a fixture table's file names, sizes, and mtimes: if the
+    fixture is regenerated in place, the key changes and a fresh copy is
+    written instead of silently reusing a stale layout."""
     import hashlib
 
-    src = os.path.join(sf_dir, "part.parquet")
+    src = os.path.join(sf_dir, f"{table}.parquet")
     parts: list[str] = []
     if os.path.isdir(src):
         for root, _dirs, files in os.walk(src):
@@ -35,7 +35,7 @@ def _source_fingerprint(sf_dir: str) -> str:
                 parts.append(f"{f}:{st.st_size}:{st.st_mtime_ns}")
     elif os.path.exists(src):
         st = os.stat(src)
-        parts.append(f"part:{st.st_size}:{st.st_mtime_ns}")
+        parts.append(f"{table}:{st.st_size}:{st.st_mtime_ns}")
     return hashlib.md5(";".join(parts).encode()).hexdigest()[:12]
 
 
@@ -45,6 +45,7 @@ def _clustered_copy(spark: SparkSession, sf_dir: str, tag: str) -> str:
     bytes reuse the layout (the rows are identical either way; only file
     boundaries matter)."""
     from lakehouse_architecture_spark.operators.partitioning import zordered_write
+    from lakehouse_architecture_spark.pipeline.table_format import publish_once
 
     # stable digest, NOT hash(): the builtin is PYTHONHASHSEED-salted, so
     # every new process would write (and orphan) a fresh copy under /tmp.
@@ -56,14 +57,14 @@ def _clustered_copy(spark: SparkSession, sf_dir: str, tag: str) -> str:
 
     key = (
         f"lhas_{tag}_{hashlib.md5(sf_dir.encode()).hexdigest()[:12]}"
-        f"_{_source_fingerprint(sf_dir)}"
+        f"_{_source_fingerprint(sf_dir, 'part')}"
     )
     path = os.path.join(tempfile.gettempdir(), key)
     # cross-process reuse needs a completeness marker: only trust a dir a
     # previous run finished (Spark writes _SUCCESS last). Writes go to a
-    # per-pid staging dir + atomic rename, so two concurrent first runs
-    # can't interleave output into the shared path — the rename loser
-    # just discards its copy and uses the winner's.
+    # per-pid staging dir + publish_once, so two concurrent first runs
+    # can't interleave output into the shared path — the loser just
+    # discards its copy and uses the winner's.
     if not os.path.isfile(os.path.join(path, "_SUCCESS")):
         staging = f"{path}.tmp{os.getpid()}"
         t = tables(spark, sf_dir)
@@ -76,13 +77,7 @@ def _clustered_copy(spark: SparkSession, sf_dir: str, tag: str) -> str:
             n_files=8,
             bits=8,
         )
-        try:
-            os.rename(staging, path)
-        except OSError:
-            # another process renamed first — keep theirs, drop ours
-            import shutil
-
-            shutil.rmtree(staging, ignore_errors=True)
+        publish_once(staging, path)
     return path
 
 
@@ -200,35 +195,20 @@ ORDER BY p_partkey
 """
 
 
-def _source_fingerprint_of(sf_dir: str, table: str) -> str:
-    """Like :func:`_source_fingerprint` but for an arbitrary fixture table."""
-    import hashlib
-
-    src = os.path.join(sf_dir, f"{table}.parquet")
-    parts: list[str] = []
-    if os.path.isdir(src):
-        for root, _dirs, files in os.walk(src):
-            for f in sorted(files):
-                st = os.stat(os.path.join(root, f))
-                parts.append(f"{f}:{st.st_size}:{st.st_mtime_ns}")
-    elif os.path.exists(src):
-        st = os.stat(src)
-        parts.append(f"{table}:{st.st_size}:{st.st_mtime_ns}")
-    return hashlib.md5(";".join(parts).encode()).hexdigest()[:12]
-
-
 def _partitioned_events_copy(spark: SparkSession, sf_dir: str) -> str:
     """Write `events` hive-partitioned by date (30 partitions) with each
     partition range-split into files by `value`, once per fixture
     generation — the layout a production event table would have (time
     partitions + value-clustered files), so BOTH pruning axes have
-    something to bite on. Same fingerprint/staging/atomic-rename protocol
+    something to bite on. Same fingerprint/staging/publish_once protocol
     as :func:`_clustered_copy`."""
     import hashlib
 
+    from lakehouse_architecture_spark.pipeline.table_format import publish_once
+
     key = (
         f"lhas_pevents_{hashlib.md5(sf_dir.encode()).hexdigest()[:12]}"
-        f"_{_source_fingerprint_of(sf_dir, 'events')}"
+        f"_{_source_fingerprint(sf_dir, 'events')}"
     )
     path = os.path.join(tempfile.gettempdir(), key)
     if not os.path.isfile(os.path.join(path, "_SUCCESS")):
@@ -245,12 +225,7 @@ def _partitioned_events_copy(spark: SparkSession, sf_dir: str) -> str:
             .partitionBy("date")
             .parquet(staging)
         )
-        try:
-            os.rename(staging, path)
-        except OSError:
-            import shutil
-
-            shutil.rmtree(staging, ignore_errors=True)
+        publish_once(staging, path)
     return path
 
 

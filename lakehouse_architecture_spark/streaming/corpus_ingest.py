@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from lakehouse_architecture_spark.operators.dedup import band_signatures
+from lakehouse_architecture_spark.streaming.sinks import start_micro_batches
 
 
 def _near_dedup_batch(
@@ -139,12 +140,7 @@ def foreach_batch_neardedup_ingest(
         kept.write.mode("overwrite").parquet(f"{corpus_path}/epoch={epoch_id}")
         sigs.write.mode("overwrite").parquet(f"{sig_path}/epoch={epoch_id}")
 
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_micro_batches(stream, apply_batch, checkpoint_dir)
 
 
 def _semantic_dedup_batch(
@@ -234,9 +230,4 @@ def foreach_batch_semantic_dedup_ingest(
             # accumulate one dead cached relation per epoch
             cached.unpersist()
 
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_micro_batches(stream, apply_batch, checkpoint_dir)

@@ -25,6 +25,7 @@ from lakehouse_architecture_spark.pipeline.expectations import (
     quarantine_split,
     violation_aggs,
 )
+from lakehouse_architecture_spark.streaming.sinks import start_micro_batches
 
 
 def foreach_batch_dq_ingest(
@@ -74,12 +75,7 @@ def foreach_batch_dq_ingest(
         finally:
             batch.unpersist()
 
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_micro_batches(stream, apply_batch, checkpoint_dir)
 
 
 def reference_histogram(
@@ -200,9 +196,4 @@ def foreach_batch_drift_monitor(
             f"{metrics_path}/epoch={epoch_id}"
         )
 
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_micro_batches(stream, apply_batch, checkpoint_dir)

@@ -7,18 +7,37 @@ into the target keyed table; the checkpoint guarantees each batch is applied
 once per epoch, and the upsert makes replays idempotent (same keys → same
 final state) — the standard exactly-once recipe for non-transactional sinks.
 
-With a transactional table format (see pipeline/table_format.py) the
-per-batch rewrite becomes a real MERGE INTO; on plain parquet the engine
-rewrites the snapshot — correct, if heavier, and partition-prunable via
-operators/upsert.touched_partitions.
+Both sinks commit through pipeline/table_format.py (``ManagedTable`` and
+``VersionedTable``), which owns the stage-and-publish protocol; with a
+transactional table format the per-batch rewrite becomes a real MERGE INTO.
+:func:`start_micro_batches` is the one ``foreachBatch`` start every
+streaming sink in the package shares.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
-from lakehouse_architecture_spark.operators.upsert import merge_upsert
+from lakehouse_architecture_spark.pipeline.table_format import ManagedTable
+
+
+def start_micro_batches(
+    stream: DataFrame,
+    apply_batch: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+) -> StreamingQuery:
+    """Start ``stream`` with ``apply_batch(batch, epoch_id)`` per
+    micro-batch, checkpointed in ``checkpoint_dir``, draining everything
+    available now and then stopping."""
+    return (
+        stream.writeStream.foreachBatch(apply_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def foreach_batch_upsert(
@@ -27,46 +46,19 @@ def foreach_batch_upsert(
     keys: list[str],
     checkpoint_dir: str,
 ) -> StreamingQuery:
-    """Run the stream with each micro-batch MERGEd into ``target_path``."""
-    spark = stream.sparkSession
+    """Run the stream with each micro-batch MERGEd into ``target_path``, a
+    parquet :class:`~lakehouse_architecture_spark.pipeline.table_format.
+    ManagedTable`: its Hadoop-FS existence check sees ``scheme://``
+    targets too, so no later epoch takes the create branch and overwrites
+    the merged table with one batch."""
+    table = ManagedTable(stream.sparkSession, target_path, keys, format="parquet")
 
     def apply_batch(batch: DataFrame, epoch_id: int) -> None:
-        import os
-        import shutil
-        import uuid
+        # last-writer within a batch is arbitrary; dedup first so the
+        # upsert is well-defined
+        table.merge(batch.dropDuplicates(keys))
 
-        batch = batch.dropDuplicates(keys)  # last-writer within a batch is
-        # arbitrary; dedup first so the upsert is well-defined
-        target = target_path.rstrip("/")
-        # PATH check, not a read probe: a transient read failure must not
-        # route a later epoch onto the create branch, where the overwrite
-        # would replace all previously merged data with one micro-batch
-        # (same rationale as pipeline/table_format.ManagedTable.exists)
-        if not os.path.exists(target):
-            batch.write.mode("overwrite").parquet(target)
-            return
-        merged = merge_upsert(spark.read.parquet(target), batch, keys)
-        # The merged snapshot must be durable BEFORE the source dir is
-        # touched — cache()+count() is not (an evicted/lost partition would
-        # recompute from the dir mid-overwrite). Two-rename swap, same as
-        # ManagedTable.merge: rmtree-then-rename would leave NO target on a
-        # crash between the steps, and the restart's create branch would
-        # then wipe every prior epoch's data. The checkpoint + idempotent
-        # merge carry the exactly-once guarantee.
-        token = uuid.uuid4().hex[:12]
-        tmp = f"{target}__epoch_tmp-{token}"
-        old = f"{target}__old-{token}"
-        merged.write.mode("overwrite").parquet(tmp)
-        os.rename(target, old)
-        os.rename(tmp, target)
-        shutil.rmtree(old)
-
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_micro_batches(stream, apply_batch, checkpoint_dir)
 
 
 def foreach_batch_versioned(
@@ -94,29 +86,11 @@ def foreach_batch_versioned(
     # "replays" — the scope makes the dedup key valid per query lineage
     scope = hashlib.md5(checkpoint_dir.encode()).hexdigest()[:8]
 
-    def _committed_epochs() -> set[str]:
-        import os
-
-        out = set()
-        for v in table.versions():
-            marker = os.path.join(table._vdir(v), "_epoch")
-            try:
-                with open(marker) as f:
-                    out.add(f.read().strip())
-            except OSError:
-                continue
-        return out
-
     def apply_batch(batch: DataFrame, epoch_id: int) -> None:
         stamp = f"{scope}:{epoch_id}"
-        if stamp in _committed_epochs():
+        if stamp in table.epochs().values():
             return  # crash-replay of an already-committed batch
         batch = batch.dropDuplicates(table.keys)
         table.merge(batch, epoch=stamp)
 
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_micro_batches(stream, apply_batch, checkpoint_dir)

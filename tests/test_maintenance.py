@@ -3,6 +3,7 @@
 import glob
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from lakehouse_architecture_spark.pipeline.maintenance import (
@@ -29,6 +30,77 @@ def test_compact_table(spark, tmp_path):
     back = spark.read.parquet(path)
     assert back.count() == 12
     assert {r["id"] for r in back.collect()} == set(range(12))
+
+
+def test_compact_table_failed_swap_keeps_table(spark, tmp_path, monkeypatch):
+    """A failure at the first directory rename of compact_table's swap
+    must leave the table readable with every row. Deleting the table
+    before renaming the staged copy in would lose it here."""
+    path = str(tmp_path / "smallfiles")
+    for i in range(6):
+        spark.createDataFrame([(i, f"v{i}")], "id int, v string").coalesce(1).write.mode(
+            "append"
+        ).parquet(path)
+    real_rename = os.rename
+
+    def rename(src, dst):
+        # per-file moves (write_bins_flat) pass; directory renames fail
+        if os.path.isdir(src):
+            raise OSError("injected directory rename failure")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", rename)
+    with pytest.raises(OSError, match="injected"):
+        compact_table(spark, path, target_file_mb=128)
+    monkeypatch.undo()
+    assert sorted(r["id"] for r in spark.read.parquet(path).collect()) == list(range(6))
+    assert not os.path.exists(path + "__compacting")
+
+
+@pytest.mark.parametrize("rollback_fails", [False, True], ids=["rollback", "crash"])
+def test_compact_partition_subset_failed_swap_adds_no_partition(
+    spark, tmp_path, monkeypatch, rollback_fails
+):
+    """Partition-subset compaction parks the old partition directory
+    inside the table while it swaps. If the second rename fails, the old
+    copy is moved back and every row reads. If moving it back fails too,
+    as after a crash between the renames, the old copy stays on disk. In
+    both cases a read must show no extra partition value and no
+    duplicated row, and the int partition column must stay int."""
+    path = str(tmp_path / "hive_int")
+    for p in (1, 2):
+        for i in range(3):
+            spark.createDataFrame(
+                [(10 * p + i, p)], "id int, p int"
+            ).coalesce(1).write.mode("append").partitionBy("p").parquet(path)
+    real_rename = os.rename
+    dir_renames = []
+
+    def rename(src, dst):
+        # per-file moves (write_bins_flat) pass; the first directory
+        # rename (old partition aside) passes, later ones fail
+        if os.path.isdir(src):
+            dir_renames.append(src)
+            if len(dir_renames) == 2 or (rollback_fails and len(dir_renames) > 2):
+                raise OSError("injected directory rename failure")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", rename)
+    with pytest.raises(OSError, match="injected"):
+        compact_table(
+            spark, path, target_file_mb=128, partition_col="p", partitions=[1]
+        )
+    monkeypatch.undo()
+    back = spark.read.parquet(path)
+    assert dict(back.dtypes)["p"] == "int"
+    rows = sorted((r["id"], r["p"]) for r in back.collect())
+    assert len(rows) == len(set(rows))
+    if rollback_fails:
+        assert rows == [(20, 2), (21, 2), (22, 2)]
+        parked = glob.glob(os.path.join(path, ".p=1__old-*"))
+        assert len(parked) == 1 and len(_parquet_files(parked[0])) == 3
+    else:
+        assert rows == [(10, 1), (11, 1), (12, 1), (20, 2), (21, 2), (22, 2)]
 
 
 def test_compact_partition_subset_preserves_other_partitions(spark, tmp_path):
@@ -444,7 +516,10 @@ def test_optimize_plan_tree_bounded_on_wide_manifest(spark, tmp_path):
     stay essentially the same size at 16 vs ~2k manifest entries."""
     from pyspark.sql import functions as F
 
-    from lakehouse_architecture_spark.pipeline.table_format import VersionedTable
+    from lakehouse_architecture_spark.pipeline.table_format import (
+        VersionedTable,
+        plan_tagged_bins,
+    )
 
     t = VersionedTable(spark, str(tmp_path / "wide"), keys=["id"])
     t.write(
@@ -456,7 +531,7 @@ def test_optimize_plan_tree_bounded_on_wide_manifest(spark, tmp_path):
     def plan_len(n_files: int) -> int:
         # synthetic manifest: only the plan SHAPE is under test here
         sizes = {f"part-{i:05d}.parquet": 1024 * (i % 7 + 1) for i in range(n_files)}
-        tagged, _ = t._bin_tagged(snapshot, sizes, "id", 4096)
+        tagged, _ = plan_tagged_bins(spark, snapshot, sizes, "id", 4096)
         plan = tagged._jdf.queryExecution().optimizedPlan().toString()
         assert "create_map" not in plan
         return len(plan)

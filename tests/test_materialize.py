@@ -1,9 +1,8 @@
 """materialize.py — the cluster-safe materialization policy (round 7).
 
-Covers: persist default (recoverable lineage, InMemoryRelation in the
-consumer plan), the localCheckpoint opt-out conf, conf validation, and
-truncate_lineage's reliable-checkpoint upgrade when a checkpoint dir is
-configured."""
+Covers: materialize_small's persist (recoverable lineage, InMemoryRelation
+in the consumer plan) and truncate_lineage's reliable-checkpoint upgrade
+when a checkpoint dir is configured."""
 
 import os
 
@@ -11,7 +10,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from lakehouse_architecture_spark.materialize import (
-    SMALL_INTERMEDIATE_MODE,
     materialize_small,
     truncate_lineage,
 )
@@ -27,7 +25,6 @@ def _small_agg(spark):
 
 
 def test_materialize_small_default_persists_with_lineage(spark):
-    spark.conf.unset(SMALL_INTERMEDIATE_MODE)
     df = materialize_small(_small_agg(spark))
     try:
         joined = df.alias("a").join(df.alias("b"), "k")
@@ -45,7 +42,6 @@ def test_materialize_small_idempotent_on_already_persisted(spark):
     # re-persisting would log CacheManager already-cached warnings per
     # call (bench-tail noise) — the second call must return the SAME
     # already-persisted frame untouched
-    spark.conf.unset(SMALL_INTERMEDIATE_MODE)
     df = materialize_small(_small_agg(spark))
     try:
         again = materialize_small(df)
@@ -53,42 +49,6 @@ def test_materialize_small_idempotent_on_already_persisted(spark):
         assert again.storageLevel.useDisk and again.storageLevel.useMemory
     finally:
         df.unpersist()
-
-
-def test_materialize_small_localcheckpoint_mode(spark):
-    spark.conf.set(SMALL_INTERMEDIATE_MODE, "localCheckpoint")
-    try:
-        df = materialize_small(_small_agg(spark))
-        assert df.count() == 7
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-        # lineage truncated: the plan is a materialized RDD scan
-        assert "LogicalRDD" in plan or "ExistingRDD" in plan
-    finally:
-        spark.conf.unset(SMALL_INTERMEDIATE_MODE)
-
-
-def test_materialize_small_rejects_unknown_mode(spark):
-    spark.conf.set(SMALL_INTERMEDIATE_MODE, "bogus")
-    try:
-        with pytest.raises(ValueError, match="bogus"):
-            materialize_small(_small_agg(spark))
-    finally:
-        spark.conf.unset(SMALL_INTERMEDIATE_MODE)
-
-
-def test_materialize_small_same_rows_in_both_modes(spark):
-    base = sorted(_small_agg(spark).collect())
-    spark.conf.unset(SMALL_INTERMEDIATE_MODE)
-    p = materialize_small(_small_agg(spark))
-    try:
-        assert sorted(p.collect()) == base
-    finally:
-        p.unpersist()
-    spark.conf.set(SMALL_INTERMEDIATE_MODE, "localCheckpoint")
-    try:
-        assert sorted(materialize_small(_small_agg(spark)).collect()) == base
-    finally:
-        spark.conf.unset(SMALL_INTERMEDIATE_MODE)
 
 
 def test_truncate_lineage_local_mode_without_checkpoint_dir(spark):
@@ -147,8 +107,7 @@ def test_truncate_lineage_uses_reliable_checkpoint_with_dir(spark, tmp_path):
 
 
 def test_pinned_queries_bounded_in_both_modes(spark):
-    """The localCheckpoint opt-out must preserve both ANSWERS and the
-    bounded-scan property on the two headline queries built around
+    """The bounded-scan property on the two headline queries built around
     materialize_small (exact-quantile counts, triangle edge tables)."""
     import os
     import sys
@@ -162,20 +121,10 @@ def test_pinned_queries_bounded_in_both_modes(spark):
 
     sf = "/root/testdata/sf0.001"
     bounds = {"q_percentile": 3, "q_triangles": 2}
-    rows_default = {}
     for name, bound in bounds.items():
         df = ALL_QUERIES[name].build(spark, sf)
-        rows_default[name] = sorted(map(str, df.collect()))
+        df.collect()
         assert live_scan_count(df) <= bound
-    spark.conf.set(SMALL_INTERMEDIATE_MODE, "localCheckpoint")
-    try:
-        for name, bound in bounds.items():
-            df = ALL_QUERIES[name].build(spark, sf)
-            got = sorted(map(str, df.collect()))
-            assert got == rows_default[name], f"{name}: mode changed answers"
-            assert live_scan_count(df) <= bound, f"{name}: scans unbounded"
-    finally:
-        spark.conf.unset(SMALL_INTERMEDIATE_MODE)
 
 
 def test_cache_once_skips_plan_equivalent_cache(spark):

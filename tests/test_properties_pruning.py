@@ -12,8 +12,7 @@ failure mode that loses rows; admitting extra partitions is always safe.
 These tests drive the pure path-walk logic with hypothesis-generated
 layouts and predicates against a reference model of Spark's semantics —
 no SparkSession needed (the method only walks directories), so hundreds
-of cases run in seconds. Also covers ``queries/registry._stale_names``,
-the round-9 rotation rule, as a pure function.
+of cases run in seconds.
 
 Spark-semantics model notes:
 * a layout whose values all parse as numbers is inferred numeric; the
@@ -230,41 +229,6 @@ def test_inlist_pruning_never_drops_a_satisfying_partition(
             assert any(
                 f.startswith(expect + os.sep) for f in admitted
             ), f"satisfying partition k={v} dropped for IN {inlist!r}"
-
-
-# --- rotation staleness rule (pure function) -----------------------------
-
-
-def test_stale_names_flags_edits_after_green():
-    from lakehouse_architecture_spark.queries.registry import _stale_names
-
-    assert _stale_names(
-        {"a": 1000.0, "b": 1000.0},
-        {"a": 2000.0, "b": 500.0},
-    ) == {"b"}  # b's module edited 500s after its green record
-
-
-def test_stale_names_slack_absorbs_clone_skew():
-    from lakehouse_architecture_spark.queries.registry import _stale_names
-
-    # fresh clone: every file lands within seconds of the records — no
-    # query may be marked stale or the rotation freezes at declared order
-    assert (
-        _stale_names({"a": 1030.0, "b": 1010.0}, {"a": 1000.0, "b": 1000.0})
-        == set()
-    )
-    # beyond the slack the flag fires
-    assert _stale_names(
-        {"a": 1100.0}, {"a": 1000.0}, slack_sec=60.0
-    ) == {"a"}
-
-
-def test_stale_names_ignores_never_green():
-    from lakehouse_architecture_spark.queries.registry import _stale_names
-
-    # never-green names have no record mtime and are handled by the
-    # age-based order, not the staleness rule
-    assert _stale_names({"a": 1000.0}, {}) == set()
 
 
 # --- compound pruning: partition x stats x bloom INTERSECT (round 10) ----

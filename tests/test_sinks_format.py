@@ -1,11 +1,14 @@
 """foreachBatch upsert sink + format-agnostic ManagedTable MERGE."""
 
 import datetime as dt
+import os
 
+import pytest
 from pyspark.sql import types as T
 
 from lakehouse_architecture_spark.pipeline.table_format import (
     ManagedTable,
+    publish_once,
     resolve_format,
 )
 from lakehouse_architecture_spark.streaming.sinks import foreach_batch_upsert
@@ -23,6 +26,32 @@ def test_resolve_format_falls_back():
     # delta jars are not in this environment -> parquet fallback
     assert resolve_format("auto") == "parquet"
     assert resolve_format("parquet") == "parquet"
+
+
+def test_publish_once_discards_staged_copy(tmp_path, monkeypatch):
+    """publish_once leaves no staged directory behind: not when the target
+    already exists (the winner's copy stays), and not when the rename
+    itself fails with the target still absent."""
+    staged, target = tmp_path / "staged", tmp_path / "target"
+    staged.mkdir()
+    (staged / "a").write_text("new")
+    assert publish_once(str(staged), str(target))
+    assert (target / "a").read_text() == "new" and not staged.exists()
+
+    staged.mkdir()
+    (staged / "a").write_text("late")
+    assert not publish_once(str(staged), str(target))
+    assert (target / "a").read_text() == "new" and not staged.exists()
+
+    staged.mkdir()
+
+    def rename(src, dst):
+        raise OSError("injected rename failure")
+
+    monkeypatch.setattr(os, "rename", rename)
+    with pytest.raises(OSError, match="injected"):
+        publish_once(str(staged), str(tmp_path / "absent"))
+    assert not staged.exists()
 
 
 def test_managed_table_merge(spark, tmp_path):
@@ -103,9 +132,14 @@ def test_versioned_table_merge_delete_keeps_history(spark, tmp_path):
     assert "del" not in v0.columns
 
 
-def test_foreach_batch_upsert_exactly_once(spark, tmp_path):
+@pytest.mark.parametrize("scheme", ["path", "uri"])
+def test_foreach_batch_upsert_exactly_once(spark, tmp_path, scheme):
+    # a "file://" target must merge like a plain path: every epoch after
+    # the first updates the table instead of overwriting it with its batch
     src = str(tmp_path / "src")
     target = str(tmp_path / "target")
+    if scheme == "uri":
+        target = "file://" + target
     ckpt = str(tmp_path / "ckpt")
     t0 = dt.datetime(2024, 1, 1)
 

@@ -455,16 +455,16 @@ def test_clustered_copy_key_tracks_fixture_fingerprint(tmp_path):
     src = "/root/testdata/sf0.001/part.parquet"
     dst = str(tmp_path / "part.parquet")
     (shutil.copytree if os.path.isdir(src) else shutil.copyfile)(src, dst)
-    fp1 = _source_fingerprint(str(tmp_path))
+    fp1 = _source_fingerprint(str(tmp_path), "part")
     probe = (
         os.path.join(dst, sorted(os.listdir(dst))[0])
         if os.path.isdir(dst)
         else dst
     )
     os.utime(probe, ns=(time.time_ns(), time.time_ns() + 1))
-    fp2 = _source_fingerprint(str(tmp_path))
+    fp2 = _source_fingerprint(str(tmp_path), "part")
     assert fp1 != fp2
     # missing fixture: stable sentinel, not an exception
-    assert _source_fingerprint(str(tmp_path / "nope")) == _source_fingerprint(
-        str(tmp_path / "nope")
-    )
+    assert _source_fingerprint(
+        str(tmp_path / "nope"), "part"
+    ) == _source_fingerprint(str(tmp_path / "nope"), "part")
