@@ -60,7 +60,7 @@ HEADLINE = [
     # plans reshaped in r9 (partition-local moment partials, array-row
     # driver fetch) with no bench-tracked floor — a future plan regression
     # there (e.g. the shuffle reverting to per-batch dim² cells) would be
-    # invisible without these rows. Floors recorded via tools/bench_band.py
+    # invisible without these rows. Floors recorded via tools/measure.py --bench
     # (see README bench-band note).
     "q_emb_cov",
     "q_corr_matrix",
@@ -90,7 +90,7 @@ HEADLINE = [
     # the bucketed two-phase weighted median (a revert to a plain global
     # window is a single-task sort over raw rows), and the Adamic-Adar
     # ctx self-join (the steepest scale mover at 30x). The headline total
-    # floor grows accordingly; bands re-recorded via tools/bench_band.py
+    # floor grows accordingly; bands re-recorded via tools/measure.py --bench
     # (see README).
     "q_ri_orphans",
     "q_weighted_median",
@@ -102,7 +102,7 @@ HEADLINE = [
     # in BENCH; q_kcore guards the one-action-per-round peel loop (r13
     # halved its driver jobs — a revert doubles round latency silently
     # otherwise). Headline total floor grows accordingly; bands
-    # re-recorded via tools/bench_band.py (see README).
+    # re-recorded via tools/measure.py --bench (see README).
     "q_nelson_aalen",
     "q_kcore",
 ]
@@ -177,7 +177,7 @@ def main() -> None:
     # shapes from the cold parquet plans (InMemoryTableScan vs file scan),
     # so the sf0.001 warm-up above did not compile their codegen — without
     # this sweep the first timed run pays whole-stage-codegen compilation
-    # and best-of-2 has only one clean sample (tools/steady_probe.py shows
+    # and best-of-2 has only one clean sample (tools/measure.py --runs 6 shows
     # first-sample outliers of 2-4x on exactly this pattern).
     for name in HEADLINE:
         try:

@@ -9,7 +9,8 @@ hashes from **md5 hex digests**, which are universal:
 Spark:  ``CAST(conv(substr(md5(s), 1, 15), 16, 10) AS BIGINT)``
 DuckDB: ``CAST(('0x' || substr(md5(s), 1, 15)) AS BIGINT)``
 
-Both verified bit-identical (tools/parity_probe*.py). md5 is used as a
+Both verified bit-identical (tools/parity_probe.py and
+tools/parity_probe_spark.py at commit f6e8d4c). md5 is used as a
 *deterministic mixer*, not for security.
 
 MinHash permutations use universal hashing h_i(x) = (a_i·x + b_i) mod p with

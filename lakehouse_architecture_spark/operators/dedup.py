@@ -172,9 +172,10 @@ def minhash_signatures(
 
     A zero-shuffle array formulation (per-row shingle array + one
     ``aggregate`` HOF computing all minima) also measured ~4× SLOWER
-    (tools/exp_minhash_array.py): HOF lambdas evaluate interpreted outside
-    whole-stage codegen and allocate per element, while this form keeps
-    every permutation update in codegen'd hash-agg arithmetic — and with
+    (tools/exp_minhash_array.py at commit f6e8d4c): HOF lambdas evaluate
+    interpreted outside whole-stage codegen and allocate per element, while
+    this form keeps every permutation update in codegen'd hash-agg
+    arithmetic — and with
     map-side partial mins the shuffle carries only (id, num_perm longs)
     per doc per map partition, not the shingle corpus.
     """

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from lakehouse_architecture_spark.catalog import load_tables
 from lakehouse_architecture_spark.materialize import cache_once
+from lakehouse_architecture_spark.session import ensure_package_on_executors
 
 
 @dataclass(frozen=True)
@@ -37,7 +38,9 @@ def tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Load + register the testdata tables as temp views for this query.
 
     Pins the two session confs the determinism rules depend on — the driver
-    may call builders on a session this engine did not construct. Loads are
+    may call builders on a session this engine did not construct — and ships
+    the package to the executors before any builder's first Arrow UDF stage
+    (see ``session.ensure_package_on_executors``). Loads are
     cached per (application, sf_dir): re-reading ten parquet footers per
     query added ~0.3s to every build. Keyed by applicationId (not object
     identity) so a stopped-and-recreated session can never alias a stale
@@ -45,7 +48,7 @@ def tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.ansi.enabled", "false")
-    _ensure_package_on_executors(spark)
+    ensure_package_on_executors(spark)
     key = (spark.sparkContext.applicationId, sf_dir)
     cached = _TABLE_CACHE.get(key)
     if cached is None:
@@ -53,19 +56,10 @@ def tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return cached
 
 
-def _ensure_package_on_executors(spark: SparkSession) -> None:
-    """Delegates to session.ensure_package_on_executors — kept as the
-    queries-layer entry point so every registry builder ships the package
-    before its first Arrow UDF stage (see that docstring for why)."""
-    from lakehouse_architecture_spark.session import ensure_package_on_executors
-
-    ensure_package_on_executors(spark)
-
-
 def warm_cached_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Decode every table once into a partitioned in-memory cache and swap
     it into this session's shared table dict + temp views — the warm-table
-    environment bench.py times against (and tools/steady_probe.py must
+    environment bench.py times against (and tools/measure.py must
     reproduce EXACTLY, hence one shared implementation).
 
     Rationale: the fixture parquet is single-row-group, and Spark's scan

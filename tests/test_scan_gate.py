@@ -74,7 +74,7 @@ def test_live_scan_count_bounded(spark, name):
     assert c["live"] <= bound, (
         f"{name}: {c['live']} live file scans (bound {bound}) — a "
         "multiply-referenced intermediate probably lost its "
-        "materialize_small pin (tools/scan_audit.py for the full audit)"
+        "materialize_small pin (tools/measure.py --parquet for the full audit)"
     )
 
 

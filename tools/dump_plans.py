@@ -1,8 +1,9 @@
 """Dump full `.explain("formatted")` output for named queries into
-plans/r15/<query>_<tag>.txt — the before/after evidence files for the
-round-15 optimization pass.
+plans/<round>/<query>_<tag>.txt — the before/after evidence files of an
+optimization pass.
 
-Usage: python tools/dump_plans_r15.py <before|after> <query> [query ...]
+Usage: python tools/dump_plans.py <round> <before|after> <query> [query ...]
+(tables from $SPARK_GRAFT_SF_DIR, default the sf0.001 test data)
 """
 
 from __future__ import annotations
@@ -17,23 +18,25 @@ from lakehouse_architecture_spark.queries.registry import ALL_QUERIES
 from lakehouse_architecture_spark.session import SessionFactory
 
 
-def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
+def main() -> int:
+    if len(sys.argv) < 4 or sys.argv[2] not in ("before", "after"):
+        print(__doc__.strip().splitlines()[-2], file=sys.stderr)
+        return 2
+    rnd, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    out_dir = os.path.join(repo, "plans", "r15")
+    out_dir = os.path.join(repo, "plans", rnd)
     os.makedirs(out_dir, exist_ok=True)
-    spark = SessionFactory(app_name="dump_plans_r15").get_or_create()
+    spark = SessionFactory(app_name="dump_plans").get_or_create()
     for name in names:
         df = ALL_QUERIES[name].build(spark, sf_dir)
-        plan = formatted_plan(df)
         path = os.path.join(out_dir, f"{name}_{tag}.txt")
         with open(path, "w") as f:
-            f.write(plan)
+            f.write(formatted_plan(df))
         print(f"wrote {path}")
     spark.stop()
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

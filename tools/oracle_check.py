@@ -118,7 +118,6 @@ def main() -> int:
         spark = (
             SparkSession.builder.master("local[8]")
             .appName("oracle_check_plain")
-            .config("spark.ui.enabled", "false")
             .getOrCreate()
         )
     else:

@@ -18,14 +18,15 @@ import json
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from lakehouse_architecture_spark.queries.registry import ALL_QUERIES
+from lakehouse_architecture_spark.materialize import release_small_pins
 from lakehouse_architecture_spark.session import SessionFactory
+from perfbench.spans import Tracer
+from tools.measure import timed_runs
 
 DEFAULT_QUERIES = [
     "q01_pricing_summary",
@@ -85,15 +86,11 @@ def amplify(spark, sf_dir: str, out_dir: str, factor: int) -> None:
             df.write.mode("overwrite").parquet(dst)
 
 
-def _time(spark, name: str, sf_dir: str) -> float:
-    best = float("inf")
-    for _ in range(2):
-        t0 = time.time()
-        ALL_QUERIES[name].build(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        best = min(best, time.time() - t0)
-    return round(best, 3)
+def _time(spark, tracer: Tracer, name: str, sf_dir: str) -> float:
+    """Best of two timed runs (``tools.measure.timed_runs``)."""
+    best = min(r["wall_s"] for r in timed_runs(spark, tracer, name, sf_dir, 2))
+    release_small_pins(spark)
+    return best
 
 
 def main() -> int:
@@ -102,12 +99,13 @@ def main() -> int:
     queries = sys.argv[3:] or DEFAULT_QUERIES
 
     spark = SessionFactory(app_name="scale_probe").get_or_create()
+    tracer = Tracer(spark, enabled=True)
     amp_dir = f"/tmp/scale_probe_x{factor}"
     amplify(spark, sf_dir, amp_dir, factor)
     try:
         for name in queries:
-            base = _time(spark, name, sf_dir)
-            amped = _time(spark, name, amp_dir)
+            base = _time(spark, tracer, name, sf_dir)
+            amped = _time(spark, tracer, name, amp_dir)
             print(
                 json.dumps(
                     {

@@ -1,45 +1,22 @@
-"""Audits how many times each registry query's executed plan scans its
-source parquet files — the metric the exact_quantiles round-6 fix was
-driven by (a composed plan that references a subtree many times can scan
-a 100 TB fact table once per reference unless the intermediate is
-materialized; exchange reuse alone does not collapse them all).
+"""Counts the file scans a query's executed plan runs: a plan that
+references a subtree N times scans its source N times unless the
+intermediate is materialized, and exchange reuse alone does not collapse
+them all (the metric behind the round-6 exact_quantiles fix).
 
-For every query: build at the given sf, execute, then walk the FINAL
-adaptive physical plan counting file-source scan leaves. High scan counts
-are not automatically bugs (multi-table joins legitimately scan several
-tables; a self-join scans its table twice) — the audit flags queries whose
-scan count exceeds a threshold so a human checks whether the repeats hit
-the same big fact.
+``scan_counts`` walks the final adaptive physical plan TREE of an
+already-executed DataFrame over py4j (round 7; a plan-string parser
+miscounted sections re-printed inside InMemoryRelation).
+``InMemoryTableScanExec`` and ``ReusedExchangeExec`` subtrees count as
+cached lineage, not live scans: the cache is populated at most once, and a
+reused shuffle was counted on its primary branch. ``AdaptiveSparkPlanExec``
+and query stages recurse into their current plans. A
+``localCheckpoint``-pinned subtree is a ``Scan ExistingRDD`` leaf, not a
+file scan (lakehouse_architecture_spark/materialize.py).
 
-Counting is a py4j walk of the physical plan TREE (round 7 — the previous
-string/indentation parser miscounted nested AdaptiveSparkPlan sections
-that re-print inside InMemoryRelation at reset indentation):
-
-- ``InMemoryTableScanExec`` subtrees are NOT descended: their lineage
-  populates the cache at most once, then every reference reads cached
-  rows (that is the invariant being audited).
-- ``ReusedExchangeExec`` is not descended: it re-reads a shuffle already
-  counted once on its primary branch.
-- ``AdaptiveSparkPlanExec`` recurses into its current final plan;
-  query-stage wrappers recurse into their materialized stage plan.
-- A subtree pinned by ``localCheckpoint``/``checkpoint`` appears as a
-  ``Scan ExistingRDD`` leaf (not a file scan — its upstream ran exactly
-  once in its own job; see lakehouse_architecture_spark/materialize.py).
-
-Usage: python tools/scan_audit.py [sf_dir] [threshold] [query ...]
-Prints one JSON line per flagged query, then a summary line.
+Registry-wide audit: ``python tools/measure.py --parquet --runs 1 SF_DIR``.
 """
 
 from __future__ import annotations
-
-import json
-import os
-import sys
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from lakehouse_architecture_spark.queries.registry import ALL_QUERIES
-from lakehouse_architecture_spark.session import SessionFactory
 
 #: Physical scan leaves that read source files.
 _FILE_SCAN_CLASSES = {"FileSourceScanExec", "BatchScanExec"}
@@ -89,55 +66,3 @@ def live_scan_count(df) -> int:
     plan (cached / reused subtrees excluded). Takes the DataFrame (round
     7: tree walk), not a plan string."""
     return scan_counts(df)["live"]
-
-
-def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    threshold = int(sys.argv[2]) if len(sys.argv) > 2 else 6
-    names = sys.argv[3:] or list(ALL_QUERIES)
-
-    spark = SessionFactory(app_name="scan_audit").get_or_create()
-    rows = []
-    for name in names:
-        spec = ALL_QUERIES[name]
-        try:
-            df = spec.build(spark, sf_dir)
-            df.collect()
-            c = scan_counts(df)
-        except Exception as e:  # noqa: BLE001
-            rows.append({"query": name, "err": str(e).splitlines()[0][:120]})
-            continue
-        rows.append(
-            {
-                "query": name,
-                "scans": c["live"],
-                "cached_lineage_scans": c["total"] - c["live"],
-                "reused": c["reused"],
-            }
-        )
-    flagged = [
-        r for r in rows if r.get("scans", 0) >= threshold or r.get("err")
-    ]
-    for r in sorted(flagged, key=lambda r: -r.get("scans", 0)):
-        print(json.dumps(r))
-    ok = [r for r in rows if not r.get("err")]
-    print(
-        json.dumps(
-            {
-                "summary": True,
-                "queries": len(rows),
-                "flagged_at_threshold": len(flagged),
-                "threshold": threshold,
-                "max_scans": max((r["scans"] for r in ok), default=0),
-                "mean_scans": round(
-                    sum(r["scans"] for r in ok) / max(1, len(ok)), 2
-                ),
-            }
-        )
-    )
-    spark.stop()
-    return 0
-
-
-if __name__ == "__main__":
-    sys.exit(main())
