@@ -30,6 +30,7 @@ from lakehouse_architecture_spark.functions.hashing import (
     minhash_perm_sql,
 )
 from lakehouse_architecture_spark.materialize import cache_once, materialize_small
+from lakehouse_architecture_spark.operators.buckets import bucket_pairs, drop_hot_keys
 from lakehouse_architecture_spark.operators.partitioning import spread_by_id
 
 
@@ -101,47 +102,15 @@ def ngram_jaccard_pairs(
     least one shingle, then |A∩B| is a count per pair and |A∪B| = |A|+|B|−∩.
     Shuffles: one on shingle (the index join), one on the pair key.
 
-    ``max_df`` is the production-scale skew guard: a shingle appearing in d
-    documents contributes d·(d−1)/2 candidate pairs, so one stopword-run
-    shingle shared by 1M docs would emit 5·10¹¹ rows into the pair shuffle.
-    With ``max_df`` set, shingles whose document frequency exceeds it are
-    dropped from the *index* before the self-join (one cheap extra
-    aggregate, broadcast anti-join). Per-document sizes still count all
-    shingles but dropped shingles no longer count toward intersections, so
-    the reported Jaccard is a LOWER BOUND — conservative for dedup: pairs
-    similar only through ubiquitous shingles (boilerplate) stop qualifying,
-    which is usually the desired behavior. Default ``None`` keeps every
-    shingle (exact semantics, oracle-matched).
+    ``max_df`` is the hot-shingle guard (operators/buckets.py): shingles
+    in more than ``max_df`` documents are dropped from the index. Sizes
+    still count every shingle, so the reported Jaccard becomes a LOWER
+    BOUND — pairs similar only through boilerplate stop qualifying, which
+    is usually what dedup wants. Default ``None`` keeps every shingle
+    (exact semantics, oracle-matched).
     """
-    # join on the 60-bit shingle hash, not the string: same result (the
-    # oracle hashes identically, so even a collision is mirrored) and a far
-    # cheaper shuffle key than multi-word strings at corpus scale
-    sh = (
-        word_shingles(df, id_col, text_col, n)
-        .select("id", md5_hash64(F.col("shingle")).alias("h"))
-    )
-    sh = cache_once(sh)
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
-    indexed = sh
-    if max_df is not None:
-        hot = (
-            sh.groupBy("h")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_df)
-            .select("h")
-        )
-        indexed = sh.join(F.broadcast(hot), "h", "left_anti")
-    a = indexed.alias("a")
-    b = indexed.alias("b")
-    inter = (
-        a.join(b, on="h")
-        .filter(F.col("a.id") < F.col("b.id"))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    out = (
-        inter.join(sizes.withColumnsRenamed({"id": "id_a", "sz": "sz_a"}), "id_a")
-        .join(sizes.withColumnsRenamed({"id": "id_b", "sz": "sz_b"}), "id_b")
+    return (
+        _shingle_overlaps(df, id_col, text_col, n, max_df)
         .withColumn(
             "jaccard",
             F.round(
@@ -153,7 +122,31 @@ def ngram_jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    return out
+
+
+def _shingle_overlaps(
+    df: DataFrame, id_col: str, text_col: str, n: int, max_df: int | None
+) -> DataFrame:
+    """(id_a, id_b, n_inter, sz_a, sz_b) for every pair sharing a kept
+    shingle: the inverted-index plan of :func:`ngram_jaccard_pairs` and
+    :func:`containment_pairs`, which differ only in the normalization."""
+    # join on the 60-bit shingle hash, not the string: same result (the
+    # oracle hashes identically, so even a collision is mirrored) and a far
+    # cheaper shuffle key than multi-word strings at corpus scale
+    sh = (
+        word_shingles(df, id_col, text_col, n)
+        .select("id", md5_hash64(F.col("shingle")).alias("h"))
+    )
+    sh = cache_once(sh)
+    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
+    inter = (
+        bucket_pairs(drop_hot_keys(sh, "h", max_df), "h")
+        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .agg(F.count(F.lit(1)).alias("n_inter"))
+    )
+    return inter.join(
+        sizes.withColumnsRenamed({"id": "id_a", "sz": "sz_a"}), "id_a"
+    ).join(sizes.withColumnsRenamed({"id": "id_b", "sz": "sz_b"}), "id_b")
 
 
 def minhash_signatures(
@@ -243,11 +236,8 @@ def minhash_lsh_candidates(
     band signature — sub-quadratic as long as buckets stay small.
     """
     band = band_signatures(df, id_col, text_col, num_perm, bands, shingle_n)
-    a = band.alias("a")
-    b = band.alias("b")
     return (
-        a.join(b, on=["band", "sig"])
-        .filter(F.col("a.id") < F.col("b.id"))
+        bucket_pairs(band, ["band", "sig"])
         .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("n_shared_bands"))
     )
@@ -348,11 +338,8 @@ def banded_hamming_pairs(
     band_rows = sig.select(
         "id", "__h", F.explode(band_arr).alias("bk")
     ).select("id", "__h", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    a = band_rows.alias("a")
-    b = band_rows.alias("b")
     cand = (
-        a.join(b, on=["band", "key"])
-        .filter(F.col("a.id") < F.col("b.id"))
+        bucket_pairs(band_rows, ["band", "key"])
         .select(
             F.col("a.id").alias("id_a"),
             F.col("b.id").alias("id_b"),
@@ -386,35 +373,12 @@ def containment_pairs(
     into a 100× larger page scores |A|/|B| ≈ 0.01 Jaccard but 1.0
     containment of A. Same inverted-index plan as
     :func:`ngram_jaccard_pairs` (one shuffle on the shingle hash, one on
-    the pair key; ``max_df`` hot-shingle guard identical), only the final
-    normalization differs.
+    the pair key), only the final normalization differs. ``max_df`` is
+    the hot-shingle guard (operators/buckets.py); with it set, both
+    containments become lower bounds.
     """
-    sh = (
-        word_shingles(df, id_col, text_col, n)
-        .select("id", md5_hash64(F.col("shingle")).alias("h"))
-    )
-    sh = cache_once(sh)
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
-    indexed = sh
-    if max_df is not None:
-        hot = (
-            sh.groupBy("h")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_df)
-            .select("h")
-        )
-        indexed = sh.join(F.broadcast(hot), "h", "left_anti")
-    a = indexed.alias("a")
-    b = indexed.alias("b")
-    inter = (
-        a.join(b, on="h")
-        .filter(F.col("a.id") < F.col("b.id"))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
     return (
-        inter.join(sizes.withColumnsRenamed({"id": "id_a", "sz": "sz_a"}), "id_a")
-        .join(sizes.withColumnsRenamed({"id": "id_b", "sz": "sz_b"}), "id_b")
+        _shingle_overlaps(df, id_col, text_col, n, max_df)
         .withColumn("cont_a", F.round(F.col("n_inter") / F.col("sz_a"), 6))
         .withColumn("cont_b", F.round(F.col("n_inter") / F.col("sz_b"), 6))
         .filter(
@@ -445,11 +409,8 @@ def blocked_fuzzy_pairs(
     cols = [F.col(id_col).alias("id"), F.col(name_col).alias("nm"), *[
         F.col(c) for c in block_cols
     ]]
-    s = df.select(*cols)
-    a, b = s.alias("a"), s.alias("b")
     return (
-        a.join(b, on=block_cols)
-        .filter(F.col("a.id") < F.col("b.id"))
+        bucket_pairs(df.select(*cols), block_cols)
         .withColumn("dist", F.levenshtein(F.col("a.nm"), F.col("b.nm")))
         .filter(F.col("dist") <= max_dist)
         .select(
@@ -703,10 +664,8 @@ def oph_candidate_pairs(
             ).alias("sig")
         )
     )
-    a, b = banded.alias("a"), banded.alias("b")
     cand = (
-        a.join(b, ["band", "sig"])
-        .filter(F.col("a.id") < F.col("b.id"))
+        bucket_pairs(banded, ["band", "sig"])
         .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("n_shared_bands"))
     )

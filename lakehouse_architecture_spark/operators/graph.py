@@ -30,6 +30,7 @@ from lakehouse_architecture_spark.materialize import (
     materialize_small,
     truncate_lineage,
 )
+from lakehouse_architecture_spark.operators.buckets import bucket_pairs
 
 
 def connected_components(
@@ -306,7 +307,7 @@ def adamic_adar(
     Shuffle shape: degree aggregate on ctx, then the self-join on ctx —
     each context with m nodes emits m·(m−1)/2 pair rows, so the candidate
     space is Σ m² over contexts, NOT |nodes|². ``max_ctx_degree`` is the
-    production skew guard (same rationale as ngram_jaccard_pairs.max_df):
+    production skew guard (same rationale as operators/buckets.py):
     a hub context shared by 1M nodes would emit 5·10¹¹ pairs for a term
     worth only 1/ln(10⁶) ≈ 0.07 each — drop contexts above the cap before
     the join and the score becomes a documented lower bound.
@@ -327,10 +328,8 @@ def adamic_adar(
         .cast("decimal(38,12)")
         .alias("w"),
     )
-    a, b = weighted.alias("a"), weighted.alias("b")
     return (
-        a.join(b, "c")
-        .filter(F.col("a.n") < F.col("b.n"))
+        bucket_pairs(weighted, "c", id_col="n")
         .groupBy(F.col("a.n").alias("node_a"), F.col("b.n").alias("node_b"))
         .agg(
             F.count(F.lit(1)).alias("n_common"),

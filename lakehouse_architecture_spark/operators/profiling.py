@@ -18,12 +18,15 @@ doubles, total-order tiebreaks).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from lakehouse_architecture_spark.materialize import materialize_small
 
 from lakehouse_architecture_spark.functions.hashing import md5_hash64
+from lakehouse_architecture_spark.operators.buckets import bucket_pairs
 from lakehouse_architecture_spark.operators.dedup import ngram_array
 from lakehouse_architecture_spark.operators.text import tokens
 
@@ -1205,6 +1208,38 @@ def jensen_shannon_pairs(
     group_b). Every p·log₂(p/m) term is rounded to 9 dp and
     decimal-summed. Returns (group_a, group_b, jsd_bits) per pair.
     """
+
+    def term(pa: Column, pb: Column) -> Column:
+        m = (pa + pb) / 2
+        # sum the UNHALVED 9-dp-rounded terms (a 9-dp value halved gains a
+        # 10th-digit tie that HALF_UP/binary rounding resolve differently
+        # across engines — caught live at sf0.1); the final x0.5 on the
+        # decimal-exact sum is an exact binary operation in both engines
+        return F.when(pa > 0, F.round(pa * F.log2(pa / m), 9)).otherwise(
+            0
+        ) + F.when(pb > 0, F.round(pb * F.log2(pb / m), 9)).otherwise(0)
+
+    return (
+        _binned_pair_terms(df, group_col, value_col, n_bins, term)
+        .groupBy("group_a", "group_b")
+        .agg(
+            F.round(F.sum("t").cast("double") * 0.5, 6).alias("jsd_bits")
+        )
+        .orderBy("group_a", "group_b")
+    )
+
+
+def _binned_pair_terms(
+    df: DataFrame,
+    group_col: str,
+    value_col: str,
+    n_bins: int,
+    term: Callable[[Column, Column], Column],
+) -> DataFrame:
+    """One (group_a < group_b, t) row per pair of groups per bin, with
+    t = ``term(p_a, p_b)`` as DECIMAL(38,9) over the equi-width bin
+    shares: the shared plan of :func:`jensen_shannon_pairs` and
+    :func:`bhattacharyya_pairs`, which differ only in the term."""
     v = F.col(value_col).cast("double")
     vals = df.select(F.col(group_col).alias("g"), v.alias("v")).filter(
         F.col("g").isNotNull() & F.col("v").isNotNull()
@@ -1241,29 +1276,10 @@ def jensen_shannon_pairs(
         .join(shares, ["g", "bin"], "left")
         .select("g", "bin", F.coalesce("p", F.lit(0.0)).alias("p"))
     )
-    a, b = dense.alias("a"), dense.alias("b")
-    pair = a.join(b, "bin").filter(F.col("a.g") < F.col("b.g"))
-    pa = F.col("a.p")
-    pb = F.col("b.p")
-    m = (pa + pb) / 2
-    # sum the UNHALVED 9-dp-rounded terms (a 9-dp value halved gains a
-    # 10th-digit tie that HALF_UP/binary rounding resolve differently
-    # across engines — caught live at sf0.1); the final x0.5 on the
-    # decimal-exact sum is an exact binary operation in both engines
-    term = F.when(pa > 0, F.round(pa * F.log2(pa / m), 9)).otherwise(
-        0
-    ) + F.when(pb > 0, F.round(pb * F.log2(pb / m), 9)).otherwise(0)
-    return (
-        pair.select(
-            F.col("a.g").alias("group_a"),
-            F.col("b.g").alias("group_b"),
-            term.cast("decimal(38,9)").alias("t"),
-        )
-        .groupBy("group_a", "group_b")
-        .agg(
-            F.round(F.sum("t").cast("double") * 0.5, 6).alias("jsd_bits")
-        )
-        .orderBy("group_a", "group_b")
+    return bucket_pairs(dense, "bin", id_col="g").select(
+        F.col("a.g").alias("group_a"),
+        F.col("b.g").alias("group_b"),
+        term(F.col("a.p"), F.col("b.p")).cast("decimal(38,9)").alias("t"),
     )
 
 
@@ -1408,51 +1424,10 @@ def bhattacharyya_pairs(
     rounded to 9 dp and decimal-summed. Returns (group_a, group_b,
     bc, d_b) per pair; d_b NULL when BC rounds to 0 (disjoint supports).
     """
-    v = F.col(value_col).cast("double")
-    vals = df.select(F.col(group_col).alias("g"), v.alias("v")).filter(
-        F.col("g").isNotNull() & F.col("v").isNotNull()
-    )
-    scal = materialize_small(
-        vals.agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
-    )
-    binned = vals.crossJoin(F.broadcast(scal)).select(
-        "g",
-        F.when(F.col("hi") == F.col("lo"), 0)
-        .otherwise(
-            F.least(
-                F.floor(
-                    (F.col("v") - F.col("lo"))
-                    / (F.col("hi") - F.col("lo"))
-                    * n_bins
-                ).cast("int"),
-                F.lit(n_bins - 1),
-            )
-        )
-        .alias("bin"),
-    )
-    counts = binned.groupBy("g", "bin").agg(F.count(F.lit(1)).alias("c"))
-    tot = counts.groupBy("g").agg(F.sum("c").alias("n_g"))
-    shares = materialize_small(
-        counts.join(tot, "g").select(
-            "g", "bin", (F.col("c").cast("double") / F.col("n_g")).alias("p")
-        )
-    )
-    dense = (
-        shares.select("g").distinct()
-        .crossJoin(shares.select("bin").distinct())
-        .join(shares, ["g", "bin"], "left")
-        .select("g", "bin", F.coalesce("p", F.lit(0.0)).alias("p"))
-    )
-    a, b = dense.alias("a"), dense.alias("b")
-    pair = a.join(b, "bin").filter(F.col("a.g") < F.col("b.g"))
-    term = F.round(F.sqrt(F.col("a.p") * F.col("b.p")), 9).cast(
-        "decimal(38,9)"
-    )
     return (
-        pair.select(
-            F.col("a.g").alias("group_a"),
-            F.col("b.g").alias("group_b"),
-            term.alias("t"),
+        _binned_pair_terms(
+            df, group_col, value_col, n_bins,
+            lambda pa, pb: F.round(F.sqrt(pa * pb), 9),
         )
         .groupBy("group_a", "group_b")
         .agg(

@@ -32,6 +32,7 @@ from lakehouse_architecture_spark.materialize import (
 )
 
 from lakehouse_architecture_spark.functions.hashing import md5_hash64
+from lakehouse_architecture_spark.operators.buckets import bucket_pairs, drop_hot_keys
 from lakehouse_architecture_spark.operators.partitioning import spread
 from lakehouse_architecture_spark.operators.relational import top_k_per_group
 
@@ -145,15 +146,11 @@ def lsh_bucket_pairs(
     with exact cosine and filtered by ``min_cos``. Shuffles once on the
     signature (bucket) key — sub-quadratic vs the full cross join.
 
-    ``max_bucket`` is the production-scale skew guard (same pattern as
-    ``ngram_jaccard_pairs``' ``max_df``): a bucket of b vectors self-joins
-    into b·(b−1)/2 candidate pairs, so a degenerate corpus (many
-    near-identical embeddings collapsing into one signature) goes quadratic
-    inside that bucket. With ``max_bucket`` set, buckets whose membership
-    exceeds it are dropped from candidate generation (one cheap aggregate,
-    broadcast anti-join) — recall on vectors in dropped buckets is
-    sacrificed, which callers handle by re-probing with more planes.
-    Default ``None`` keeps every bucket (exact semantics, oracle-matched).
+    ``max_bucket`` is the hot-bucket guard (operators/buckets.py) for
+    degenerate corpora whose near-identical embeddings collapse into one
+    signature: recall on vectors in dropped buckets is lost, which callers
+    handle by re-probing with more planes. Default ``None`` keeps every
+    bucket (exact semantics, oracle-matched).
     """
     hp = hyperplane(dim, planes)
     # planes×dim multiply-adds per row: spread before the signature scan
@@ -163,19 +160,8 @@ def lsh_bucket_pairs(
         F.col(vec_col).alias("v"),
         lsh_signature(vec_col, hp).alias("sig"),
     )
-    if max_bucket is not None:
-        hot = (
-            sigd.groupBy("sig")
-            .agg(F.count(F.lit(1)).alias("members"))
-            .filter(F.col("members") > max_bucket)
-            .select("sig")
-        )
-        sigd = sigd.join(F.broadcast(hot), "sig", "left_anti")
-    a = sigd.alias("a")
-    b = sigd.alias("b")
     return (
-        a.join(b, on="sig")
-        .filter(F.col("a.id") < F.col("b.id"))
+        bucket_pairs(drop_hot_keys(sigd, "sig", max_bucket), "sig")
         .withColumn("cos", F.round(cosine(F.col("a.v"), F.col("b.v")), 6))
         .filter(F.col("cos") >= min_cos)
         .select(
@@ -207,9 +193,8 @@ def cosine_neardup(
 
     At scale: candidate generation shuffles once on the signature;
     the component propagation iterates only over the (small) pair set,
-    never the corpus. ``max_bucket`` guards degenerate corpora (many
-    identical embeddings collapsing into one bucket) exactly as in
-    :func:`lsh_bucket_pairs`. Recall is governed by ``planes`` — fewer
+    never the corpus. ``max_bucket`` guards degenerate corpora exactly as
+    in :func:`lsh_bucket_pairs`. Recall is governed by ``planes`` — fewer
     planes → more candidate pairs → higher recall and cost.
     """
     from lakehouse_architecture_spark.operators.graph import dedup_clusters
@@ -577,10 +562,9 @@ def semdedup_prune_cached(
     shuffle on cell for the within-cell self-join; candidate pairs are
     bounded per cell, never corpus-wide. At production scale n_cells grows
     with the corpus (the paper uses ~0.01x vectors) so cells stay small;
-    ``max_cell`` is the skew guard — cells larger than it are excluded
-    from pairing (their vectors are kept), mirroring ``max_bucket`` in
-    :func:`lsh_bucket_pairs`, since a degenerate quantizer would otherwise
-    re-create the quadratic blow-up cell-locally.
+    ``max_cell`` is the hot-cell guard (operators/buckets.py) for a
+    degenerate quantizer: cells larger than it are excluded from pairing,
+    so their vectors are all kept.
     """
     # cached: the assignment subtree (broadcast scoring + top-1 window) is
     # referenced by both pair sides and the final output — without the
@@ -593,27 +577,11 @@ def semdedup_prune_cached(
     cells = (
         cache_once(assign.select(F.col(id_col).alias("id"), "cell").join(vecs, "id"))
     )
-    if max_cell is not None:
-        big = (
-            cells.groupBy("cell")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > max_cell)
-            .select("cell")
-        )
-        cells = cells.join(F.broadcast(big), "cell", "left_anti")
-    a = cells.select("cell", F.col("id").alias("id_keep"), F.col("v").alias("va"))
-    b = cells.select("cell", F.col("id").alias("id_prune"), F.col("v").alias("vb"))
-    pruned = (
-        a.join(b, "cell")
-        .filter(F.col("id_keep") < F.col("id_prune"))
-        .filter(F.round(cosine(F.col("va"), F.col("vb")), 6) >= F.lit(min_cos))
-        .select("id_prune")
-        .distinct()
-    )
+    pruned = semdedup_cell_losers(drop_hot_keys(cells, "cell", max_cell), min_cos)
     out = (
         assign.select(F.col(id_col), "cell")
         .join(
-            pruned.withColumnRenamed("id_prune", id_col).withColumn(
+            pruned.withColumnRenamed("id", id_col).withColumn(
                 "pruned", F.lit(True)
             ),
             id_col,
@@ -626,3 +594,16 @@ def semdedup_prune_cached(
         )
     )
     return out, [assign, cells]
+
+
+def semdedup_cell_losers(cells: DataFrame, min_cos: float) -> DataFrame:
+    """The SemDeDup within-cell prune over (id, cell, v) rows: the distinct
+    ``id`` of every vector with a lower-id vector of its cell within
+    ``min_cos`` cosine. Shared by the batch prune above and the streaming
+    ingest's in-batch prune (streaming/corpus_ingest.py)."""
+    return (
+        bucket_pairs(cells, "cell")
+        .filter(F.round(cosine(F.col("a.v"), F.col("b.v")), 6) >= F.lit(min_cos))
+        .select(F.col("b.id").alias("id"))
+        .distinct()
+    )

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from lakehouse_architecture_spark.materialize import materialize_small
 
 from lakehouse_architecture_spark.functions.hashing import md5_hash64
+from lakehouse_architecture_spark.operators.buckets import hot_keys
 
 #: Tiny per-language stopword lists for the n-gram/stopword language-ID
 #: heuristic. Deliberately small + deterministic so the oracle can replicate.
@@ -260,10 +261,8 @@ def drop_duplicate_lines(
     banners, license boilerplate — content repeated across many pages),
     and reassemble each document preserving original line order.
 
-    Plan shape: posexplode -> hash-agg on the line hash for document
-    frequency -> the hot-line set is SMALL by construction (only lines
-    repeated in > max_df docs), so it broadcasts back as an anti-join —
-    the same guard pattern as ``ngram_jaccard_pairs``' ``max_df``. The
+    Plan shape: posexplode -> the hot-line set of operators/buckets.py
+    over distinct (line hash, doc) rows, broadcast back as a flag. The
     reassembly is one hash-agg per doc collecting (pos, line) structs,
     sorted in-array (deterministic, no window sort needed).
 
@@ -276,14 +275,7 @@ def drop_duplicate_lines(
         )
     )
     hashed = lines.withColumn("h", md5_hash64(F.col("line")))
-    hot = (
-        hashed.select("h", "id")
-        .distinct()
-        .groupBy("h")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > max_df)
-        .select("h")
-    )
+    hot = hot_keys(hashed.select("h", "id").distinct(), "h", max_df)
     kept_flag = hashed.join(F.broadcast(hot).withColumn("__hot", F.lit(1)), "h", "left")
     return (
         kept_flag.groupBy("id")

@@ -7,8 +7,8 @@ decisions (features [area, bedrooms, location_encoded], target price,
 RandomForest with 100 trees, seed 42, 80/20 split, R² metric) with
 distributed spark.ml so the same pipeline runs at any scale.
 
-MLflow logging is optional (import-gated) — tracking-server wiring is
-deployment config, not engine logic.
+MLflow logging is out of engine scope: ``TrainResult`` carries the model
+and R² for a caller to log with whatever tracking server it runs.
 """
 
 from __future__ import annotations
@@ -66,19 +66,6 @@ def train_price_model(
     out = TrainResult(model=model, r2=r2, n_train=train.count(), n_test=test.count())
     vec.unpersist()
     return out
-
-
-def log_to_mlflow(result: TrainResult, params: dict | None = None) -> bool:
-    """Optional MLflow logging (reference: realestate_pipeline.py:228-235).
-    Returns False when mlflow is not installed — never a hard dependency."""
-    try:
-        import mlflow
-    except ImportError:
-        return False
-    with mlflow.start_run():
-        mlflow.log_params(params or {})
-        mlflow.log_metric("r2", result.r2)
-    return True
 
 
 @dataclass

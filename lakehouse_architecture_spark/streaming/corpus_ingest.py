@@ -162,6 +162,7 @@ def _semantic_dedup_batch(
     from lakehouse_architecture_spark.operators.similarity import (
         centroid_assignment,
         cosine,
+        semdedup_cell_losers,
     )
 
     # ONE assignment per batch, cached — the store join, the in-batch
@@ -184,17 +185,9 @@ def _semantic_dedup_batch(
             .distinct()
         )
         rows = rows.join(dup_ids, "id", "left_anti")
-    # in-batch prune inlined against the cached assignment (calling
-    # semdedup_prune here would recompute the assignment on survivors)
-    a = rows.select("cell", F.col("id").alias("id_keep"), F.col("v").alias("va"))
-    b = rows.select("cell", F.col("id").alias("id_prune"), F.col("v").alias("vb"))
-    losers = (
-        a.join(b, "cell")
-        .filter(F.col("id_keep") < F.col("id_prune"))
-        .filter(F.round(cosine(F.col("va"), F.col("vb")), 6) >= F.lit(min_cos))
-        .select(F.col("id_prune").alias("id"))
-        .distinct()
-    )
+    # in-batch prune against the cached assignment (calling semdedup_prune
+    # here would recompute the assignment on survivors)
+    losers = semdedup_cell_losers(rows, min_cos)
     return rows.join(losers, "id", "left_anti"), cached
 
 

@@ -1,5 +1,6 @@
 """Edge cases for text operators: empty/whitespace/punctuation-only text."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from lakehouse_architecture_spark.operators.dedup import simhash, word_shingles
@@ -92,9 +93,11 @@ def test_winnow_guarantee_and_short_doc(spark):
     assert not (by_doc[1] & by_doc[3])
 
 
-def test_ngram_jaccard_max_df_drops_boilerplate_pairs(spark):
-    from lakehouse_architecture_spark.operators.dedup import ngram_jaccard_pairs
+@pytest.mark.parametrize("generator", ["ngram_jaccard_pairs", "containment_pairs"])
+def test_ngram_jaccard_max_df_drops_boilerplate_pairs(spark, generator):
+    from lakehouse_architecture_spark.operators import dedup
 
+    pairs = getattr(dedup, generator)
     boiler = "standard legal footer applies to every document here"
     df = spark.createDataFrame(
         [
@@ -105,8 +108,8 @@ def test_ngram_jaccard_max_df_drops_boilerplate_pairs(spark):
         ],
         "doc_id int, text string",
     )
-    exact = ngram_jaccard_pairs(df, "doc_id", "text", n=3, threshold=0.3)
-    capped = ngram_jaccard_pairs(df, "doc_id", "text", n=3, threshold=0.3, max_df=3)
+    exact = pairs(df, "doc_id", "text", n=3, threshold=0.3)
+    capped = pairs(df, "doc_id", "text", n=3, threshold=0.3, max_df=3)
     exact_pairs = {(r.id_a, r.id_b) for r in exact.collect()}
     capped_pairs = {(r.id_a, r.id_b) for r in capped.collect()}
     # boilerplate-only pairs qualify without the cap, vanish with it
