@@ -91,8 +91,20 @@ WINDOW = 50  # the driver's per-round correctness window size
 
 def _first_green_rounds(repo: str | None = None) -> dict[str, int]:
     """Per query: the FIRST driver round with a green row — the round the
-    query stopped being never-green and stopped preempting window slots.
-    Same record-reading rules as :func:`_verification_history`."""
+    query stopped being never-green and stopped preempting window slots."""
+    first: dict[str, int] = {}
+    for rnd, green in sorted(_correctness_rounds(repo).items()):
+        for name in green:
+            first.setdefault(name, rnd)
+    return first
+
+
+def _correctness_rounds(repo: str | None = None) -> dict[int, set[str]]:
+    """Round -> the queries with a green row in that round's
+    CORRECTNESS_r<round>.json at the repo root. A row is green when it has
+    no error and no failed check (rows-only records pass with null checks).
+    An unparseable file is a round with no green row; with no files at all,
+    ordering degrades to the declared family order."""
     import glob
     import json
     import os
@@ -102,10 +114,12 @@ def _first_green_rounds(repo: str | None = None) -> dict[str, int]:
         repo = os.path.dirname(
             os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
         )
-    first: dict[str, int] = {}
+    rounds: dict[int, set[str]] = {}
     for path in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")):
         m = re.search(r"_r(\d+)\.json$", path)
-        rnd = int(m.group(1)) if m else 0
+        if not m:
+            continue
+        green = rounds.setdefault(int(m.group(1)), set())
         try:
             with open(path) as f:
                 data = json.load(f)
@@ -114,13 +128,10 @@ def _first_green_rounds(repo: str | None = None) -> dict[str, int]:
         for name, row in data.items():
             if not isinstance(row, dict) or row.get("err"):
                 continue
-            checks = (
-                row.get("rows_match"), row.get("schema_match"), row.get("hash_match")
-            )
-            if False in checks:
-                continue
-            first[name] = min(rnd, first.get(name, rnd))
-    return first
+            checks = (row.get("rows_match"), row.get("schema_match"), row.get("hash_match"))
+            if False not in checks:
+                green.add(name)
+    return rounds
 
 
 def staleness_bound(
@@ -201,19 +212,7 @@ def rotation_forecast(window: int = WINDOW) -> dict[str, int]:
     of round head+1+p//window). VERDICT r12 #7: the full oracle run stamps
     this into LOCAL_ORACLE.__meta__ so a future staleness breach is
     visible one round before the guard fires."""
-    import glob
-    import os
-    import re
-
-    repo = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    rounds = [
-        int(m.group(1))
-        for p in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))
-        if (m := re.search(r"_r(\d+)\.json$", p))
-    ]
-    head = max(rounds, default=0)
+    head = max(_correctness_rounds(), default=0)
     return {
         name: head + 1 + pos // window
         for pos, name in enumerate(ALL_QUERIES)
@@ -221,38 +220,12 @@ def rotation_forecast(window: int = WINDOW) -> dict[str, int]:
 
 
 def _verification_history(repo: str | None = None) -> dict[str, tuple[int, int]]:
-    """Per query: (green rounds count, last green round) from the driver's
-    CORRECTNESS_r*.json files at the repo root. A row is green when it has
-    no error and no failed check (rows-only records pass with null checks).
-    Missing/unparseable files contribute nothing — ordering degrades to the
-    declared family order."""
-    import glob
-    import json
-    import os
-    import re
-
-    if repo is None:
-        repo = os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        )
+    """Per query: (green rounds count, last green round)."""
     hist: dict[str, tuple[int, int]] = {}
-    for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
-        m = re.search(r"_r(\d+)\.json$", path)
-        rnd = int(m.group(1)) if m else 0
-        try:
-            with open(path) as f:
-                data = json.load(f)
-        except (OSError, ValueError):
-            continue
-        for name, row in data.items():
-            if not isinstance(row, dict) or row.get("err"):
-                continue
-            checks = (row.get("rows_match"), row.get("schema_match"), row.get("hash_match"))
-            if False in checks:
-                continue
-            n, last = hist.get(name, (0, 0))
-            # numeric max, not file order: glob sorts r100 before r11
-            hist[name] = (n + 1, max(rnd, last))
+    # numeric round order, not file order: glob sorts r100 before r11
+    for rnd, green in sorted(_correctness_rounds(repo).items()):
+        for name in green:
+            hist[name] = (hist.get(name, (0, 0))[0] + 1, rnd)
     return hist
 
 

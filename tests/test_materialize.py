@@ -106,27 +106,6 @@ def test_truncate_lineage_uses_reliable_checkpoint_with_dir(spark, tmp_path):
         assert sc.getCheckpointDir() is None
 
 
-def test_pinned_queries_bounded_in_both_modes(spark):
-    """The bounded-scan property on the two headline queries built around
-    materialize_small (exact-quantile counts, triangle edge tables)."""
-    import os
-    import sys
-
-    sys.path.insert(
-        0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    from tools.scan_audit import live_scan_count
-
-    from lakehouse_architecture_spark.queries.registry import ALL_QUERIES
-
-    sf = "/root/testdata/sf0.001"
-    bounds = {"q_percentile": 3, "q_triangles": 2}
-    for name, bound in bounds.items():
-        df = ALL_QUERIES[name].build(spark, sf)
-        df.collect()
-        assert live_scan_count(df) <= bound
-
-
 def test_cache_once_skips_plan_equivalent_cache(spark):
     from lakehouse_architecture_spark.materialize import cache_once
 

@@ -27,6 +27,22 @@ def test_bench_band_summary_unchanged():
     assert (got["warm_min_sum"], got["cold_min_sum"]) == (27.521, 51.038)
 
 
+@pytest.mark.parametrize("code, out", [(1, "warming up\n"), (0, "")])
+def test_bench_band_reports_a_run_without_output(monkeypatch, code, out):
+    """A bench.py run that exits non-zero or prints no JSON line fails with
+    its stderr tail, not a bare IndexError."""
+    import subprocess
+
+    from tools import measure
+
+    def run(*args, **kwargs):
+        return subprocess.CompletedProcess(args, code, out, "Traceback ...\nMemoryError: boom\n")
+
+    monkeypatch.setattr(measure.subprocess, "run", run)
+    with pytest.raises(RuntimeError, match=f"run 1 exited {code} with no JSON line:\n(.|\n)*MemoryError: boom"):
+        measure.bench_band("", 2)
+
+
 def test_tools_import_without_running():
     """Every tools/ script imports cleanly (its main stays behind the
     ``__main__`` guard), and the two names perfbench imports from outside

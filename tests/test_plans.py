@@ -3,8 +3,6 @@
 Correct-at-sf0.01 is not enough — these assert the plan shapes that survive
 a 1000-executor, 100 TB deployment (SURVEY.md §4)."""
 
-import pytest
-
 from lakehouse_architecture_spark.plans.inspect import (
     assert_broadcast_join,
     assert_no_cartesian,
@@ -412,77 +410,6 @@ def test_no_raw_row_percentile_aggregates(spark):
         )
         hits = re.findall(r"(?<!approx_)\bpercentile\(", plan)
         assert not hits, f"{name}: exact percentile aggregate leaked into plan"
-
-
-def test_multi_reference_operators_scan_sources_boundedly(spark):
-    """Regression guard for the round-6 scan-audit fixes: operators whose
-    tiny intermediates are referenced many times must materialize them
-    (materialize.materialize_small — persist by default) instead of
-    re-scanning the fact per reference. Counts LIVE file-scan leaves in
-    the final executed plan via a physical-tree walk (cached
-    InMemoryRelation lineage and checkpointed ExistingRDD subtrees run at
-    most once — see tools/scan_audit.py). Bounds are the fixed plans'
-    counts + 1 slack; q_triangles was 288 before the fix."""
-    import os
-    import sys
-
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    from tools.scan_audit import live_scan_count
-
-    bounds = {
-        "q_percentile": 3,      # was 15
-        "q_equidepth_bins": 3,  # was 15
-        "q_triangles": 2,       # was 288
-        "q_ks_drift": 4,        # was 20 (11 live)
-        "q_cross_corr": 3,      # was 13
-        "q_int8_knn": 3,        # was 16
-        "q_churn": 3,           # was 8
-        "q_chi2": 4,            # was 10
-    }
-    for name, bound in bounds.items():
-        df = _q(spark, name)
-        df.collect()
-        got = live_scan_count(df)
-        assert got <= bound, (
-            f"{name}: {got} live source scans (bound {bound}) — a "
-            f"multi-referenced subtree lost its materialization"
-        )
-
-
-@pytest.mark.slow  # round 16: 372 s measured — the single largest test;
-# executes the whole registry. Gated out of the driver-budget run
-# (pytest.ini); the per-family scan gate keeps fast coverage via
-# tests/test_plans.py's plan-shape gates + the r16 changed-query checks.
-def test_registry_wide_live_scan_gate(spark):
-    """Registry-WIDE scan-audit gate (round 7): every declared query's
-    executed plan must stay under a generous global live-scan threshold,
-    so the next q_triangles (288 live scans of one fact before its round-6
-    fix) cannot land anywhere in the registry, not just in the 8 pinned
-    plans above. Threshold 8 = the current max legitimate multi-table
-    count (6-table TPC-H joins + a self-join) + slack; per-query pins for
-    known-risky plans stay in the test above. Runs at sf0.001 so the full
-    sweep stays a few minutes."""
-    import os
-    import sys
-
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    from tools.scan_audit import live_scan_count
-
-    from lakehouse_architecture_spark.queries.registry import ALL_QUERIES
-
-    THRESHOLD = 8
-    over: dict[str, int] = {}
-    for name, spec in ALL_QUERIES.items():
-        df = spec.build(spark, SF)
-        df.collect()
-        got = live_scan_count(df)
-        if got > THRESHOLD:
-            over[name] = got
-    assert not over, (
-        f"queries exceeding the {THRESHOLD}-live-scan gate (a "
-        f"multi-referenced subtree is re-scanning its source per "
-        f"reference — materialize it, see materialize.py): {over}"
-    )
 
 
 def test_dynamic_partition_pruning_fires_on_partitioned_fact(spark, tmp_path):

@@ -4,6 +4,7 @@ work each run caused, and each query's scan and shuffle audit.
     python tools/measure.py [--runs N] SF_DIR [QUERY ...]            # warm cached tables
     python tools/measure.py --parquet [--runs N] SF_DIR [QUERY ...]  # the parquet files
     python tools/measure.py --bench [FILE.jsonl] [--runs N]          # bench.py band
+    python tools/measure.py --budget [--runs N] SF_DIR [QUERY ...]   # PLAN_BUDGET.json
 
 No query names means the whole registry; ``--runs`` defaults to 2.
 
@@ -27,6 +28,13 @@ the worst shuffle-write MB (last execute) per scanned MB.
 ``--bench`` runs ``bench.py`` N times in fresh processes, or reads a file of
 its JSON lines (``bench_runs/``), and prints ``summarize`` over them. Only
 multi-run per-query minima compare across runs.
+
+``--budget`` writes ``PLAN_BUDGET.json``, the committed plan budget that
+``tests/test_plan_budget.py`` holds every query to: ``budget_rows`` keeps
+each counter's maximum over N passes of the named queries in a new session
+with the test fixture's confs (``local[8]``, 8 shuffle partitions). Named queries replace only their own rows. The budget is taken at
+sf0.001 with a fresh ``TMPDIR`` and ``--runs 5``: a query's first use of a
+temp directory can start extra build jobs.
 """
 
 from __future__ import annotations
@@ -43,13 +51,14 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from lakehouse_architecture_spark.materialize import release_small_pins  # noqa: E402
-from lakehouse_architecture_spark.queries.base import warm_cached_tables  # noqa: E402
+from lakehouse_architecture_spark.queries.base import tables, warm_cached_tables  # noqa: E402
 from lakehouse_architecture_spark.queries.registry import ALL_QUERIES  # noqa: E402
 from lakehouse_architecture_spark.session import SessionFactory  # noqa: E402
 from perfbench.spans import STAGE_FIELDS, Tracer  # noqa: E402
 from tools.scan_audit import scan_counts  # noqa: E402
 
 _MB = 1024.0 * 1024.0
+BUDGET = os.path.join(REPO, "PLAN_BUDGET.json")
 
 
 def _noop(df) -> None:
@@ -99,6 +108,68 @@ def record(spark, tracer: Tracer, name: str, sf_dir: str, runs: int, parquet: bo
     shuffled = last["execute"]["shuffle_write_mb"]
     rec["shuffle_over_scan"] = round(shuffled / rec["scanned_mb"], 4) if rec["scanned_mb"] else None
     return rec
+
+
+def budget_row(spark, tracer: Tracer, name: str, sf_dir: str) -> dict:
+    """One query's plan budget counters from a fresh build and ``collect()``
+    over the parquet files: live file ``scans`` of the executed plan, the
+    ``build_jobs`` started inside ``QuerySpec.build``, ``jobs`` and
+    ``stages`` of build plus collect, and the ``pins`` released after it.
+    The tables load first, outside the spans, so a first query does not
+    count the catalog's load jobs. Each row starts with no pins and an empty
+    cache: a ``cache_once`` table that an earlier query left behind (the
+    shingle index ``q_ngram_jaccard`` shares with ``q_dedup_components``)
+    would otherwise make a row depend on which queries ran before it."""
+    tables(spark, sf_dir)
+    release_small_pins(spark)
+    spark.catalog.clearCache()
+    try:
+        with tracer.span("build") as build:
+            df = ALL_QUERIES[name].build(spark, sf_dir)
+        with tracer.span("collect") as run:
+            df.collect()
+        scans = scan_counts(df)["live"]
+    finally:
+        pins = release_small_pins(spark)
+    return {
+        "scans": scans,
+        "build_jobs": build["jobs"],
+        "jobs": build["jobs"] + run["jobs"],
+        "stages": build["stages"] + run["stages"],
+        "pins": pins,
+    }
+
+
+def budget_rows(sf_dir: str, names: list[str], runs: int) -> dict[str, dict]:
+    """Each counter's maximum over ``runs`` passes of ``names``, in a new
+    session with the test fixture's confs (``local[8]``, 8 shuffle
+    partitions). Every row goes to stderr as it is measured."""
+    spark = SessionFactory(app_name="measure", master="local[8]", shuffle_partitions=8).get_or_create()
+    tracer = Tracer(spark, enabled=True)
+    rows: dict[str, dict] = {}
+    try:
+        for _ in range(runs):
+            for name in names:
+                row = budget_row(spark, tracer, name, sf_dir)
+                print(json.dumps({"query": name, **row}), file=sys.stderr)
+                prev = rows.get(name, row)
+                rows[name] = {k: max(v, prev[k]) for k, v in row.items()}
+    finally:
+        spark.stop()
+    return rows
+
+
+def write_budget(rows: dict[str, dict]) -> None:
+    """Replace these rows of ``PLAN_BUDGET.json``; other rows stay as they
+    are."""
+    budget = {}
+    if os.path.exists(BUDGET):
+        with open(BUDGET) as f:
+            budget = json.load(f)
+    budget.update(rows)
+    lines = [f"  {json.dumps(q)}: {json.dumps(budget[q])}" for q in ALL_QUERIES if q in budget]
+    with open(BUDGET, "w") as f:
+        f.write("{\n" + ",\n".join(lines) + "\n}\n")
 
 
 def summarize(runs: list[dict]) -> dict:
@@ -157,7 +228,11 @@ def bench_band(path: str, runs: int) -> dict:
     for i in range(runs):
         print(f"run {i + 1}/{runs} ...", file=sys.stderr)
         proc = subprocess.run([sys.executable, "bench.py"], capture_output=True, text=True, cwd=REPO)
-        lines.append(proc.stdout.strip().splitlines()[-1])
+        out = proc.stdout.strip().splitlines()
+        if proc.returncode != 0 or not out:
+            tail = "\n".join(proc.stderr.strip().splitlines()[-20:])
+            raise RuntimeError(f"bench.py run {i + 1} exited {proc.returncode} with no JSON line:\n{tail}")
+        lines.append(out[-1])
         print(lines[-1])
     return summarize([json.loads(line) for line in lines])
 
@@ -165,8 +240,9 @@ def bench_band(path: str, runs: int) -> dict:
 def main() -> int:
     p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     p.add_argument("--parquet", action="store_true", help="read the parquet files, not cached tables")
-    p.add_argument("--runs", type=int, default=2, help="timed runs per query, or bench.py runs")
+    p.add_argument("--runs", type=int, default=2, help="timed runs per query, bench.py runs, or budget passes")
     p.add_argument("--bench", nargs="?", const="", metavar="FILE", help="summarize bench.py runs")
+    p.add_argument("--budget", action="store_true", help="write PLAN_BUDGET.json rows")
     p.add_argument("sf_dir", nargs="?")
     p.add_argument("queries", nargs="*")
     args = p.parse_args()
@@ -178,6 +254,9 @@ def main() -> int:
     if args.sf_dir is None:
         p.error("SF_DIR is required")
 
+    if args.budget:
+        write_budget(budget_rows(args.sf_dir, args.queries or list(ALL_QUERIES), args.runs))
+        return 0
     spark = SessionFactory(app_name="measure").get_or_create()
     tracer = Tracer(spark, enabled=True)
     if not args.parquet:
