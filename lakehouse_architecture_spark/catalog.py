@@ -51,14 +51,10 @@ class TableSpec:
     #: high-cardinality columns with a per-file BLOOM manifest — equality
     #: predicates on these skip files the bloom rejects (no false
     #: negatives); the min/max boxes can't help a point lookup unless the
-    #: table happens to be sorted by that column
+    #: table happens to be sorted by that column. Each file's filter is
+    #: sized from its own key count (~10 bits/key, 4 hashes —
+    #: sources/manifest._auto_bloom_bits) and stores its size in its row
     bloom_cols: tuple[str, ...] = ()
-    #: bloom sizing: None = auto-size each file's filter from its own key
-    #: count (~10 bits/key — sources/manifest._auto_bloom_bits; a fixed
-    #: size saturates on big files and the read path silently degrades to
-    #: a full scan + residual filter); set an int to pin the bit count
-    bloom_bits: int | None = None
-    bloom_hashes: int = 4
 
 
 class Catalog:
@@ -76,7 +72,7 @@ class Catalog:
         self._tables: dict[str, TableSpec] = {}
         self._manifests: dict[str, DataFrame] = {}
         #: cached hive-partition index per table: layout signature ->
-        #: [(unescaped value, [parquet files])] — see _partition_index
+        #: [(partition directory, [parquet files])] — see _partition_index
         self._part_index: dict[str, tuple[tuple, list[tuple[str, list[str]]]]] = {}
         #: cached inferred schema per table — a plain parquet read re-reads
         #: footers on every call otherwise (round 10, VERDICT r9 #6)
@@ -117,22 +113,12 @@ class Catalog:
         partition_by: tuple[str, ...] = (),
         stats_cols: tuple[str, ...] = (),
         bloom_cols: tuple[str, ...] = (),
-        bloom_bits: int | None = None,
-        bloom_hashes: int = 4,
         **options: str,
     ) -> TableSpec:
         path = os.path.join(self.root, relpath or name) if self.root else (relpath or name)
         return self.register(
             TableSpec(
-                name,
-                path,
-                format,
-                partition_by,
-                options,
-                stats_cols,
-                bloom_cols,
-                bloom_bits,
-                bloom_hashes,
+                name, path, format, partition_by, options, stats_cols, bloom_cols
             )
         )
 
@@ -169,6 +155,13 @@ class Catalog:
         partition ∩ min/max manifest). On columns with no manifest or
         partition layout the same call degrades to scan + filter, so query
         code stays layout-independent.
+
+        This is the one reader of an admitted file list. Every manifest
+        and the partition index are built from
+        :func:`...sources.manifest.data_files`, the files the plain read
+        sees (Spark's hidden-path rule skips ``_temporary/`` and
+        ``.``-prefixed paths), so a pruned read returns exactly the plain
+        read plus the residual filter.
         """
         spec = self._tables[name]
         preds = self._normalize_where(where)
@@ -445,27 +438,24 @@ class Catalog:
     def _partition_index(
         self, name: str, spec: TableSpec
     ) -> list[tuple[str, list[str]]]:
-        """The table's hive-partition listing ``[(unescaped value,
-        [parquet files])]`` — cached per (table, layout signature) so
-        repeated pruned reads don't re-walk the directory tree (round 10,
-        VERDICT r9 #2). At metastore scale this cache IS the metastore's
-        partition listing; here it is rebuilt from one filesystem walk
-        whenever the shallow mtime signature changes or an engine write
-        invalidates it."""
+        """The table's hive-partition listing ``[(partition directory,
+        [parquet files])]``: :func:`...sources.manifest.data_files` grouped
+        by parent directory, so hidden paths (``_temporary/``) are never
+        partitions. Cached per (table, layout signature) so repeated pruned
+        reads don't re-walk the directory tree (round 10, VERDICT r9 #2).
+        At metastore scale this cache IS the metastore's partition listing;
+        here it is rebuilt from one listing whenever the shallow mtime
+        signature changes or an engine write invalidates it."""
+        from lakehouse_architecture_spark.sources.manifest import data_files
+
         sig = self._layout_signature(spec.path)
         cached = self._part_index.get(name)
         if cached is not None and cached[0] == sig:
             return cached[1]
-        parts: list[tuple[str, list[str]]] = []
-        token_any = "="
-        for root, _dirs, files in os.walk(spec.path):
-            if token_any not in os.path.basename(root):
-                continue
-            pq = [
-                os.path.join(root, f) for f in files if f.endswith(".parquet")
-            ]
-            if pq:
-                parts.append((root, pq))
+        by_dir: dict[str, list[str]] = {}
+        for f in data_files(spec.path):
+            by_dir.setdefault(os.path.dirname(f), []).append(f)
+        parts = [(d, fs) for d, fs in by_dir.items() if "=" in os.path.basename(d)]
         self._part_index[name] = (sig, parts)
         return parts
 
@@ -738,7 +728,6 @@ class Catalog:
         :meth:`_bloom_probe_compatible` first."""
         from lakehouse_architecture_spark.sources.manifest import (
             bloom_admitted_files,
-            bloom_pruned_files,
             pruned_files,
             pruned_files_any,
         )
@@ -750,26 +739,23 @@ class Catalog:
             values = [v for v in pred[1] if v is not None]
             if not values:
                 return None
-            if col in spec.bloom_cols:
-                if not self._bloom_probe_compatible(spec, col, values):
-                    return None  # representation mismatch: no pruning
-                # ONE executor-side manifest pass for the whole list
-                return set(
-                    bloom_admitted_files(self.bloom_manifest(name, col), values)
-                )
-            if col in spec.stats_cols:
-                # ONE manifest filter (OR of per-value boxes) + collect —
-                # not one driver-side Spark job per listed value
-                return set(pruned_files_any(self.manifest(name), col, values))
-            return None
-        _, lo, hi = pred
-        if col in spec.bloom_cols and lo is not None and lo == hi:
-            if not self._bloom_probe_compatible(spec, col, [lo]):
+        else:
+            _, lo, hi = pred
+            values = [lo] if lo is not None and lo == hi else []
+        if values and col in spec.bloom_cols:
+            if not self._bloom_probe_compatible(spec, col, values):
                 return None  # representation mismatch: no pruning
-            return set(bloom_pruned_files(self.bloom_manifest(name, col), lo))
-        if col in spec.stats_cols and (lo is not None or hi is not None):
-            return set(pruned_files(self.manifest(name), col, lo, hi))
-        return None
+            # ONE executor-side manifest pass for the whole list
+            return set(bloom_admitted_files(self.bloom_manifest(name, col), values))
+        if col not in spec.stats_cols:
+            return None
+        if len(pred) == 2:
+            # ONE manifest filter (OR of per-value boxes) + collect — not
+            # one driver-side Spark job per listed value
+            return set(pruned_files_any(self.manifest(name), col, values))
+        if lo is None and hi is None:
+            return None
+        return set(pruned_files(self.manifest(name), col, lo, hi))
 
     @staticmethod
     def _apply_residual(df: DataFrame, preds: list[tuple]) -> DataFrame:
@@ -834,15 +820,8 @@ class Catalog:
                 file_bloom_manifest,
             )
 
-            self._manifests[key] = file_bloom_manifest(
-                self.spark,
-                spec.path,
-                col,
-                num_bits=spec.bloom_bits,
-                num_hashes=spec.bloom_hashes,
-            )
             self._manifests[key] = truncate_lineage(
-                self._manifests[key], eager=True
+                file_bloom_manifest(self.spark, spec.path, col), eager=True
             )
         return self._manifests[key]
 

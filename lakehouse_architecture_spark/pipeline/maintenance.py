@@ -49,7 +49,6 @@ def compact_table(
     coalesce instead merges files in arbitrary order — fine for file
     COUNT, destructive for key clustering.
     """
-    import glob
     import os
     import shutil
 
@@ -58,6 +57,7 @@ def compact_table(
         swap_in,
         write_bins_flat,
     )
+    from lakehouse_architecture_spark.sources.manifest import data_files
 
     def rewrite(src_dir: str, staging_dir: str) -> int:
         """Plan + execute one directory's compaction into staging_dir;
@@ -65,11 +65,10 @@ def compact_table(
         # basenames are the bin-join key (plan_tagged_bins): two files in
         # different subdirectories sharing a basename would silently
         # collapse into ONE size entry and corrupt the plan — refuse loudly
-        # (round 15, ADVICE r14)
+        # (round 15, ADVICE r14). Only the files Spark reads are listed, so
+        # a leftover _temporary/ copy never collides.
         sizes: dict[str, int] = {}
-        for f in glob.glob(
-            os.path.join(src_dir, "**", "*.parquet"), recursive=True
-        ):
+        for f in data_files(src_dir):
             b = os.path.basename(f)
             if b in sizes:
                 raise ValueError(

@@ -1,13 +1,16 @@
-"""File-statistics manifest + manifest-pruned reads — Iceberg's manifest
-idea as a library over plain parquet.
+"""File-statistics and bloom manifests over plain parquet — Iceberg's
+manifest idea as a library.
 
 A 100 TB table is tens of thousands of files; the fastest scan is the one
 that never opens most of them. Transactional formats keep per-file column
 min/max in their metadata layer and prune before planning; plain parquet
 has the same stats in every footer but Spark only consults them row-group
-by row-group AFTER listing+scheduling every file. This module materializes
-the stats once into a manifest table, then turns predicates into a file
-list Spark is given explicitly — pruning at plan time, not task time.
+by row-group AFTER listing+scheduling every file. This module lists a
+table's data files once (:func:`data_files`, the same files
+``spark.read.parquet(path)`` reads), materializes per-file stats or blooms
+into a manifest table, and turns predicates into a file list.
+:meth:`...catalog.Catalog.read` is the one reader that opens such a list —
+pruning at plan time, not task time.
 
 Scale design: footer reads are distributed (``mapInPandas`` over the file
 list — each task opens only footers, never data pages; ~KB per file), the
@@ -20,6 +23,7 @@ clustered column, so a point/range predicate typically keeps O(1) files.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterator
 
 import pandas as pd
@@ -42,11 +46,51 @@ def _stats_schema(cols: list[str]) -> T.StructType:
     return T.StructType(fields)
 
 
-def _list_files(path: str) -> list[str]:
-    import glob
-    import os
+def data_files(path: str) -> list[str]:
+    """The sorted ``.parquet`` files under ``path`` that
+    ``spark.read.parquet(path)`` reads. Below the root, Spark's listing
+    (``HadoopFSUtils.shouldFilterOutPathName``) skips every directory or
+    file whose name starts with ``.``, or starts with ``_`` and holds no
+    ``=`` — the ``_temporary/`` of an in-flight or crashed write, the
+    ``.``-parked copy of a swap. Every manifest and partition index is
+    built from this listing, so a pruned read admits only files the plain
+    read also sees."""
 
-    return sorted(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
+    def hidden(name: str) -> bool:
+        return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not hidden(d)]
+        out.extend(
+            os.path.join(root, f)
+            for f in files
+            if f.endswith(".parquet") and not hidden(f)
+        )
+    return sorted(out)
+
+
+def _per_file(
+    spark: SparkSession, files: list[str], schema: T.StructType, row_of
+) -> DataFrame:
+    """One ``schema`` row per file, ``row_of(file)`` run on executors over
+    the distributed file list. A file that vanished between listing and
+    read (compaction/vacuum race) is skipped, not failed — the next
+    refresh's semi-join would drop its row anyway."""
+    names = [f.name for f in schema.fields]
+
+    def rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for batch in batches:
+            out = []
+            for f in batch["file"]:
+                try:
+                    out.append(row_of(f))
+                except FileNotFoundError:
+                    continue
+            yield pd.DataFrame(out, columns=names)
+
+    flist = spark.createDataFrame([(f,) for f in files], ["file"])
+    return flist.mapInPandas(rows, schema=schema)
 
 
 def _manifest_for_files(
@@ -54,45 +98,27 @@ def _manifest_for_files(
 ) -> DataFrame:
     """Distributed footer stats for an explicit file list. Each executor
     task opens only footers, never data pages."""
-    import os
 
-    schema = _stats_schema(cols)
-
-    def read_footers(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def stats_row(f: str) -> dict:
         import pyarrow.parquet as pq
 
-        for batch in batches:
-            out = []
-            for f in batch["file"]:
-                try:
-                    md = pq.ParquetFile(f).metadata
-                except FileNotFoundError:
-                    # file vanished between listing and footer read
-                    # (compaction/vacuum race) — it would be dropped by the
-                    # next refresh's semi-join anyway, so skip, don't fail
+        md = pq.ParquetFile(f).metadata
+        names = [md.schema.column(i).name for i in range(len(md.schema))]
+        row: dict = {"file": f, "n_rows": md.num_rows, "bytes": os.path.getsize(f)}
+        for c in cols:
+            i = names.index(c)
+            lo = hi = None
+            for g in range(md.num_row_groups):
+                st = md.row_group(g).column(i).statistics
+                if st is None or not st.has_min_max:
                     continue
-                names = [md.schema.column(i).name for i in range(len(md.schema))]
-                row: dict = {
-                    "file": f,
-                    "n_rows": md.num_rows,
-                    "bytes": os.path.getsize(f),
-                }
-                for c in cols:
-                    i = names.index(c)
-                    lo = hi = None
-                    for g in range(md.num_row_groups):
-                        st = md.row_group(g).column(i).statistics
-                        if st is None or not st.has_min_max:
-                            continue
-                        lo = st.min if lo is None else min(lo, st.min)
-                        hi = st.max if hi is None else max(hi, st.max)
-                    row[f"min_{c}"] = None if lo is None else float(lo)
-                    row[f"max_{c}"] = None if hi is None else float(hi)
-                out.append(row)
-            yield pd.DataFrame(out, columns=[f.name for f in schema.fields])
+                lo = st.min if lo is None else min(lo, st.min)
+                hi = st.max if hi is None else max(hi, st.max)
+            row[f"min_{c}"] = None if lo is None else float(lo)
+            row[f"max_{c}"] = None if hi is None else float(hi)
+        return row
 
-    flist = spark.createDataFrame([(f,) for f in files], ["file"])
-    return flist.mapInPandas(read_footers, schema=schema)
+    return _per_file(spark, files, _stats_schema(cols), stats_row)
 
 
 def file_manifest(spark: SparkSession, path: str, cols: list[str]) -> DataFrame:
@@ -103,7 +129,7 @@ def file_manifest(spark: SparkSession, path: str, cols: list[str]) -> DataFrame:
     The footer reads run on executors — the driver only lists the
     directory. Null-only columns yield NULL bounds (never prunable).
     """
-    return _manifest_for_files(spark, _list_files(path), cols)
+    return _manifest_for_files(spark, data_files(path), cols)
 
 
 def refresh_manifest(
@@ -123,9 +149,7 @@ def refresh_manifest(
     particular they can never touch files compaction has since removed
     (the footer reader also skips vanished files defensively, so the one
     materializing pass is safe even on an uncached input manifest)."""
-    listing = spark.createDataFrame(
-        [(f,) for f in _list_files(path)], ["file"]
-    )
+    listing = spark.createDataFrame([(f,) for f in data_files(path)], ["file"])
     kept = truncate_lineage(
         manifest.join(F.broadcast(listing), "file", "left_semi"), eager=True
     )
@@ -185,39 +209,6 @@ def pruned_files_any(
             & (F.col(f"min_{col}").isNull() | (F.col(f"min_{col}") <= F.lit(v)))
         )
     return [r.file for r in manifest.filter(cond).select("file").collect()]
-
-
-def pruned_read(
-    spark: SparkSession,
-    path: str,
-    manifest: DataFrame,
-    col: str,
-    lo: float | None = None,
-    hi: float | None = None,
-    options: dict | None = None,
-) -> DataFrame:
-    """Read only the files that can contain ``col`` in [lo, hi], with the
-    residual predicate still applied (file pruning is a superset filter,
-    not the filter itself). An empty candidate list returns an empty
-    DataFrame with the table's schema.
-
-    ``basePath`` is always set to the table root so a hive-partitioned
-    layout keeps its partition columns when individual leaf files are
-    opened (without it Spark cannot derive ``dt=...`` columns from a leaf
-    file list and the pruned read would silently change the schema);
-    ``options`` forwards any reader options the plain path would use."""
-    files = pruned_files(manifest, col, lo, hi)
-    reader = spark.read.option("basePath", path)
-    for k, v in (options or {}).items():
-        reader = reader.option(k, v)
-    if not files:
-        return reader.parquet(path).limit(0)
-    df = reader.parquet(*files)
-    if lo is not None:
-        df = df.filter(F.col(col) >= F.lit(lo))
-    if hi is not None:
-        df = df.filter(F.col(col) <= F.lit(hi))
-    return df
 
 
 # --- bloom-filter file skipping (equality predicates) -----------------------
@@ -282,7 +273,7 @@ _BLOOM_BITS_CAP = 1 << 30  # keeps num_bits in int32 and the builder's
 def _auto_bloom_bits(n_keys: int) -> int:
     """~10 bits per stored key, rounded up to a power of two, floor 8192,
     capped at 2^30. 10 bits/key with 4 hashes gives FPR ≈
-    (1-e^(-4/10))^4 ≈ 1.2%; the old fixed 8192-bit default saturates above
+    (1-e^(-4/10))^4 ≈ 1.2%; a fixed 8192-bit filter saturates above
     ~1k keys/file and silently degrades the read path to a full scan +
     residual filter. Above ~107M non-null keys in a single file the cap
     binds and FPR rises smoothly (e.g. ~5% at 2× the cap's key budget) —
@@ -293,87 +284,66 @@ def _auto_bloom_bits(n_keys: int) -> int:
     return bits
 
 
-def file_bloom_manifest(
-    spark: SparkSession,
-    path: str,
-    col: str,
-    num_bits: int | None = None,
-    num_hashes: int = 4,
-) -> DataFrame:
+#: hash functions per bloom; stored in every manifest row next to the
+#: file's own ``num_bits``, so the check side needs no sizing contract
+_BLOOM_HASHES = 4
+
+_BLOOM_SCHEMA = T.StructType(
+    [
+        T.StructField("file", T.StringType()),
+        T.StructField("bloom", T.BinaryType()),
+        T.StructField("num_bits", T.IntegerType()),
+        T.StructField("num_hashes", T.IntegerType()),
+    ]
+)
+
+
+def file_bloom_manifest(spark: SparkSession, path: str, col: str) -> DataFrame:
     """One row per parquet file: (file, bloom, num_bits, num_hashes) where
     ``bloom`` is a bit filter over the file's ``col`` values. Executors
     read ONLY that column (parquet column pruning via pyarrow), so cost is
     one column's pages per file, embarrassingly parallel over files.
 
-    ``num_bits=None`` (default) sizes each file's filter from its OWN
-    value count (~10 bits/key, power of two, floor 8192) — a fixed size
+    Each file's filter is sized from its OWN value count (~10 bits/key,
+    power of two, floor 8192 — :func:`_auto_bloom_bits`) — a fixed size
     either saturates on big files (FPR → 1, pruning silently lost) or
-    wastes bytes on small ones. The per-file size is stored in the
-    manifest row, so the check side needs no out-of-band sizing contract.
+    wastes bytes on small ones.
     """
     from lakehouse_architecture_spark.session import ensure_package_on_executors
 
     # the builder closure references module-level hash helpers, so workers
     # re-import this package — ship it for drivers launched off-repo
     ensure_package_on_executors(spark)
-    files = _list_files(path)
-    schema = T.StructType(
-        [
-            T.StructField("file", T.StringType()),
-            T.StructField("bloom", T.BinaryType()),
-            T.StructField("num_bits", T.IntegerType()),
-            T.StructField("num_hashes", T.IntegerType()),
-        ]
-    )
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def bloom_row(f: str) -> dict:
         import pyarrow.parquet as pq
 
-        for batch in batches:
-            out = []
-            for f in batch["file"]:
-                try:
-                    tbl = pq.ParquetFile(f).read(columns=[col])
-                except FileNotFoundError:
-                    continue
-                vals = [v for v in tbl.column(col).to_pylist() if v is not None]
-                bits_n = num_bits if num_bits else _auto_bloom_bits(len(vals))
-                bits = bytearray(bits_n // 8)
-                for v in vals:
-                    for p in _bloom_positions(v, bits_n, num_hashes):
-                        bits[p // 8] |= 1 << (p % 8)
-                out.append(
-                    {
-                        "file": f,
-                        "bloom": bytes(bits),
-                        "num_bits": bits_n,
-                        "num_hashes": num_hashes,
-                    }
-                )
-            yield pd.DataFrame(
-                out, columns=["file", "bloom", "num_bits", "num_hashes"]
-            )
+        tbl = pq.ParquetFile(f).read(columns=[col])
+        vals = [v for v in tbl.column(col).to_pylist() if v is not None]
+        num_bits = _auto_bloom_bits(len(vals))
+        bits = bytearray(num_bits // 8)
+        for v in vals:
+            for p in _bloom_positions(v, num_bits, _BLOOM_HASHES):
+                bits[p // 8] |= 1 << (p % 8)
+        return {
+            "file": f,
+            "bloom": bytes(bits),
+            "num_bits": num_bits,
+            "num_hashes": _BLOOM_HASHES,
+        }
 
-    flist = spark.createDataFrame([(f,) for f in files], ["file"])
-    return flist.mapInPandas(build, schema=schema)
+    return _per_file(spark, data_files(path), _BLOOM_SCHEMA, bloom_row)
 
 
-def bloom_admitted_files(
-    bloom_manifest: DataFrame,
-    values: list,
-    num_bits: int = 8192,
-    num_hashes: int = 4,
-) -> list[str]:
+def bloom_admitted_files(bloom_manifest: DataFrame, values: list) -> list[str]:
     """Files whose bloom admits ANY of ``values`` (possible members), as a
     sorted file list. The bit tests run EXECUTOR-side via ``mapInPandas``
     and only admitted file NAMES return to the driver — collecting the
     bloom bytes themselves does not scale (auto-sized blooms on a 60M-row
     table are ~0.5 MB/file; a 256-file manifest collected driver-side was
     measured 5x SLOWER than the full scan it was meant to beat). Sizing
-    comes from the manifest's own (num_bits, num_hashes) columns when
-    present (per-file auto sizing); the arguments are the fallback for
-    legacy two-column manifests. An IN-list is one manifest pass no matter
-    how many values."""
+    comes from each row's own (num_bits, num_hashes). An IN-list is one
+    manifest pass no matter how many values."""
     from pyspark.sql import SparkSession
 
     from lakehouse_architecture_spark.session import ensure_package_on_executors
@@ -381,8 +351,6 @@ def bloom_admitted_files(
     spark = getattr(bloom_manifest, "sparkSession", None) or SparkSession.getActiveSession()
     if spark is not None:
         ensure_package_on_executors(spark)
-    has_sizing = "num_bits" in bloom_manifest.columns
-    cols = ["file", "bloom"] + (["num_bits", "num_hashes"] if has_sizing else [])
     vals = list(values)
 
     def check(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -390,8 +358,7 @@ def bloom_admitted_files(
         for pdf in batches:
             keep = []
             for row in pdf.itertuples(index=False):
-                nb = int(row.num_bits) if has_sizing else num_bits
-                nh = int(row.num_hashes) if has_sizing else num_hashes
+                nb, nh = int(row.num_bits), int(row.num_hashes)
                 b = row.bloom
                 for v in vals:
                     pos = pos_cache.get((v, nb, nh))
@@ -402,40 +369,7 @@ def bloom_admitted_files(
                         break
             yield pd.DataFrame({"file": keep})
 
-    out = bloom_manifest.select(*cols).mapInPandas(check, "file string")
+    out = bloom_manifest.select(
+        "file", "bloom", "num_bits", "num_hashes"
+    ).mapInPandas(check, "file string")
     return sorted(r["file"] for r in out.collect())
-
-
-def bloom_pruned_files(
-    bloom_manifest: DataFrame,
-    value: object,
-    num_bits: int = 8192,
-    num_hashes: int = 4,
-) -> list[str]:
-    """Single-value form of :func:`bloom_admitted_files`."""
-    return bloom_admitted_files(bloom_manifest, [value], num_bits, num_hashes)
-
-
-def bloom_pruned_read(
-    spark: SparkSession,
-    path: str,
-    bloom_manifest: DataFrame,
-    col: str,
-    value: object,
-    num_bits: int = 8192,
-    num_hashes: int = 4,
-    options: dict | None = None,
-) -> DataFrame:
-    """Equality read through the bloom manifest: scan only files that can
-    contain ``value``; the residual ``col = value`` filter still applies
-    (blooms have false positives, never false negatives). ``basePath`` is
-    pinned to the table root so hive partition columns survive leaf-file
-    reads, and ``options`` forwards reader options — same contract as
-    :func:`pruned_read`."""
-    files = bloom_pruned_files(bloom_manifest, value, num_bits, num_hashes)
-    reader = spark.read.option("basePath", path)
-    for k, v in (options or {}).items():
-        reader = reader.option(k, v)
-    if not files:
-        return reader.parquet(path).limit(0).filter(F.col(col) == F.lit(value))
-    return reader.parquet(*files).filter(F.col(col) == F.lit(value))

@@ -759,6 +759,29 @@ def test_compact_table_rejects_duplicate_basenames(spark, tmp_path):
         compact_table(spark, path, target_file_mb=128)
 
 
+def test_compact_table_ignores_spark_hidden_leftovers(spark, tmp_path):
+    """A leftover ``_temporary/`` file is not part of the table Spark
+    reads, so it cannot collide with a live file's basename: compaction
+    plans and rewrites the visible rows only."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "leftover")
+    leftover = os.path.join(path, "_temporary", "0")
+    os.makedirs(leftover)
+    for i in range(4):
+        pq.write_table(
+            pa.table({"id": list(range(10 * i, 10 * i + 10))}),
+            os.path.join(path, f"part-{i}.parquet"),
+        )
+    pq.write_table(
+        pa.table({"id": [100, 101]}), os.path.join(leftover, "part-0.parquet")
+    )
+    assert compact_table(spark, path, target_file_mb=128) == 1
+    back = spark.read.parquet(path)
+    assert sorted(r["id"] for r in back.collect()) == list(range(40))
+
+
 def test_plan_tagged_bins_fails_fast_on_missing_manifest_entry(spark, tmp_path):
     """ADVICE r14 (round 15): a snapshot row whose file has no size entry
     must raise at execution — the previous inner join silently dropped it

@@ -86,21 +86,16 @@ def test_bloom_never_false_negative(spark, keys):
     positives allowed, false negatives never)."""
     import tempfile
 
-    from lakehouse_architecture_spark.sources.manifest import (
-        bloom_pruned_read,
-        file_bloom_manifest,
-    )
+    from lakehouse_architecture_spark.catalog import Catalog
 
     with tempfile.TemporaryDirectory() as d:
-        path = f"{d}/t"
+        cat = Catalog(spark, d)
+        spec = cat.define("t", bloom_cols=("k",))
         spark.createDataFrame([(k,) for k in keys], "k long").repartition(
             4
-        ).write.parquet(path)
-        bloom = file_bloom_manifest(spark, path, "k").localCheckpoint(
-            eager=True
-        )
+        ).write.parquet(spec.path)
         for k in keys[:5]:  # spot-check a handful per example
-            got = bloom_pruned_read(spark, path, bloom, "k", k).collect()
+            got = cat.read("t", where=("k", k, k)).collect()
             assert [r["k"] for r in got] == [k]
 
 

@@ -1161,3 +1161,58 @@ def test_partition_padded_date_value_no_prune(spark, tmp_path):
             is None
         )
     _pruned_read_matches_residual(spark, cat, "xpad", ("d", "2024-01-01", None))
+
+
+def test_pruned_read_skips_spark_hidden_files(spark, tmp_path):
+    """A leftover ``_temporary/`` file (an in-flight or crashed Spark
+    write) is invisible to the plain read; the stats and bloom manifests
+    must not admit it either, or a pruned read returns its rows."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    cat = Catalog(spark, str(tmp_path))
+    spec = cat.define("hid", stats_cols=("v",), bloom_cols=("id",))
+    spark.range(40).select(
+        "id", (F.col("id") % 4).cast("double").alias("v")
+    ).repartitionByRange(4, "id").write.parquet(spec.path)
+    leftover = os.path.join(spec.path, "_temporary", "0")
+    os.makedirs(leftover)
+    pq.write_table(
+        pa.table({"id": [99], "v": [2.0]}),
+        os.path.join(leftover, "part-9.parquet"),
+    )
+    plain = spark.read.parquet(spec.path)
+    for where in (("v", 1.5, 2.5), ("id", 99, 99)):
+        got = sorted(r["id"] for r in cat.read("hid", where=where).collect())
+        want = sorted(
+            r["id"] for r in Catalog._apply_residual(plain, [where]).collect()
+        )
+        assert got == want, (where, got, want)
+
+
+def test_partition_pruned_read_skips_spark_hidden_dirs(spark, tmp_path):
+    """A partition directory under a leftover ``_temporary/`` tree is not
+    a partition of the table: the partition index must skip it instead of
+    handing Spark a file list with two directory structures."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    cat = Catalog(spark, str(tmp_path))
+    spec = cat.define("hidp", partition_by=("k",))
+    spark.createDataFrame(
+        [(i, "ab"[i % 2]) for i in range(20)], "rid int, k string"
+    ).write.partitionBy("k").parquet(spec.path)
+    leftover = os.path.join(
+        spec.path, "_temporary", "0", "_temporary", "attempt_0", "k=a"
+    )
+    os.makedirs(leftover)
+    pq.write_table(
+        pa.table({"rid": pa.array([99], pa.int32())}),
+        os.path.join(leftover, "part-9.parquet"),
+    )
+    got = _pruned_read_matches_residual(spark, cat, "hidp", ("k", ["a"]))
+    assert got == set(range(0, 20, 2))

@@ -171,22 +171,21 @@ def test_bucketed_tables_join_without_shuffle(spark, tmp_path):
 
 
 def test_manifest_pruned_read_with_zorder(spark, tmp_path):
-    """zordered_write + file_manifest + pruned_read: a 2-D point predicate
-    must touch a small fraction of files and return exactly the full-scan
-    answer — the plan-time data-skipping loop closed end to end."""
-    from lakehouse_architecture_spark.sources.manifest import (
-        file_manifest,
-        pruned_files,
-        pruned_read,
-    )
+    """zordered_write + the catalog's stats manifest + Catalog.read: a 2-D
+    point predicate must touch a small fraction of files and return
+    exactly the full-scan answer — the plan-time data-skipping loop closed
+    end to end."""
+    from lakehouse_architecture_spark.catalog import Catalog
+    from lakehouse_architecture_spark.sources.manifest import pruned_files
 
     df = spark.range(64 * 64).select(
         (F.col("id") % 64).alias("x"), (F.col("id") / 64).cast("long").alias("y")
     )
-    path = str(tmp_path / "zt")
-    zordered_write(df, path, ["x", "y"], n_files=16, bits=6)
+    cat = Catalog(spark, str(tmp_path))
+    spec = cat.define("zt", stats_cols=("x", "y"))
+    zordered_write(df, spec.path, ["x", "y"], n_files=16, bits=6)
 
-    man = file_manifest(spark, path, ["x", "y"]).cache()
+    man = cat.manifest("zt")
     assert man.count() == 16
     assert man.agg(F.sum("n_rows")).collect()[0][0] == 64 * 64
 
@@ -194,14 +193,15 @@ def test_manifest_pruned_read_with_zorder(spark, tmp_path):
     files = pruned_files(man, "x", lo=10, hi=12)
     assert 0 < len(files) <= 8, files
 
-    got = pruned_read(spark, path, man, "x", lo=10, hi=12)
+    got = cat.read("zt", where=("x", 10, 12))
+    assert len(got.inputFiles()) == len(files)
     full = df.filter((F.col("x") >= 10) & (F.col("x") <= 12))
     assert got.count() == full.count() == 3 * 64
     assert got.agg(F.sum("y")).collect()[0][0] == full.agg(F.sum("y")).collect()[0][0]
 
     # out-of-domain predicate: zero files, empty result, schema intact
     assert pruned_files(man, "y", lo=1000) == []
-    empty = pruned_read(spark, path, man, "y", lo=1000)
+    empty = cat.read("zt", where=("y", 1000, None))
     assert empty.count() == 0 and set(empty.columns) == {"x", "y"}
 
 
@@ -301,27 +301,27 @@ def test_remove_spans_preserves_untouched_docs_and_id_column(spark):
 
 def test_bloom_manifest_skips_files(spark, tmp_path):
     """Per-file blooms admit the files containing a key (no false
-    negatives) and skip most others on a range-clustered layout."""
+    negatives) and skip most others on a range-clustered layout; an
+    equality Catalog.read scans only the admitted files."""
     from pyspark.sql import functions as F
 
-    from lakehouse_architecture_spark.sources.manifest import (
-        bloom_pruned_files,
-        bloom_pruned_read,
-        file_bloom_manifest,
-    )
+    from lakehouse_architecture_spark.catalog import Catalog
+    from lakehouse_architecture_spark.sources.manifest import bloom_admitted_files
 
-    path = str(tmp_path / "keys")
+    cat = Catalog(spark, str(tmp_path))
+    spec = cat.define("keys", bloom_cols=("k",))
     spark.range(4096).select(F.col("id").alias("k")).repartitionByRange(
         16, "k"
-    ).write.parquet(path)
-    bloom = file_bloom_manifest(spark, path, "k").localCheckpoint(eager=True)
+    ).write.parquet(spec.path)
+    bloom = cat.bloom_manifest("keys", "k")
     assert bloom.count() == 16
-    files = bloom_pruned_files(bloom, 1234)
+    files = bloom_admitted_files(bloom, [1234])
     assert 1 <= len(files) < 16  # admits the right file, skips most
-    got = bloom_pruned_read(spark, path, bloom, "k", 1234).collect()
-    assert [r["k"] for r in got] == [1234]
+    got = cat.read("keys", where=("k", 1234, 1234))
+    assert len(got.inputFiles()) == len(files)
+    assert [r["k"] for r in got.collect()] == [1234]
     # absent key: may admit false-positive files but returns zero rows
-    assert bloom_pruned_read(spark, path, bloom, "k", 999999).count() == 0
+    assert cat.read("keys", where=("k", 999999, 999999)).count() == 0
 
 
 def test_zorder_cluster_autoscales_large_ranges(spark, tmp_path):
@@ -361,27 +361,27 @@ def test_bloom_canon_decimal_matches_query_literals():
 
 
 def test_bloom_decimal_column_end_to_end(spark, tmp_path):
-    """End-to-end no-false-negative check on a DECIMAL(10,2) column."""
+    """End-to-end no-false-negative check on a DECIMAL(10,2) column, read
+    through the catalog's bloom route (fewer files than the table)."""
     from pyspark.sql import functions as F
 
-    from lakehouse_architecture_spark.sources.manifest import (
-        bloom_pruned_read,
-        file_bloom_manifest,
-    )
+    from lakehouse_architecture_spark.catalog import Catalog
 
-    path = str(tmp_path / "dec")
+    cat = Catalog(spark, str(tmp_path))
+    spec = cat.define("dec", bloom_cols=("amt",))
     spark.range(2000).select(
         F.col("id").cast("decimal(10,2)").alias("amt")
-    ).repartitionByRange(8, "amt").write.parquet(path)
-    bloom = file_bloom_manifest(spark, path, "amt").localCheckpoint(eager=True)
-    got = bloom_pruned_read(spark, path, bloom, "amt", 777).collect()
+    ).repartitionByRange(8, "amt").write.parquet(spec.path)
+    df = cat.read("dec", where=("amt", 777, 777))
+    assert len(df.inputFiles()) < 8
+    got = df.collect()
     assert len(got) == 1 and float(got[0]["amt"]) == 777.0
 
 
 def test_bloom_auto_sizing_keeps_fpr_under_2pct(spark, tmp_path):
-    """With num_bits=None each file's filter is sized ~10 bits/key (4
-    hashes → theoretical FPR ≈ 1.2%); probe 2000 absent keys against a
-    5k-key file and pin the measured FPR < 2% — the sizing claim from
+    """Each file's filter is sized ~10 bits/key (4 hashes → theoretical
+    FPR ≈ 1.2%); probe 2000 absent keys against a 5k-key file and pin the
+    measured FPR < 2% — the sizing claim from
     sources/manifest._auto_bloom_bits, measured rather than asserted."""
     from pyspark.sql import functions as F
 
@@ -406,24 +406,6 @@ def test_bloom_auto_sizing_keeps_fpr_under_2pct(spark, tmp_path):
     assert all(admits(k) for k in range(0, 5000, 97))  # no false negatives
     fp = sum(admits(k) for k in range(1_000_000, 1_002_000))
     assert fp / 2000 < 0.02, f"measured FPR {fp / 2000:.4f}"
-
-
-def test_bloom_fixed_sizing_fallback_still_honored(spark, tmp_path):
-    """An explicit num_bits pins the size (the manifest stores it and the
-    check side uses the stored value)."""
-    from pyspark.sql import functions as F
-
-    from lakehouse_architecture_spark.sources.manifest import (
-        bloom_pruned_files,
-        file_bloom_manifest,
-    )
-
-    path = str(tmp_path / "fixed")
-    spark.range(100).select(F.col("id").alias("k")).coalesce(1).write.parquet(path)
-    man = file_bloom_manifest(spark, path, "k", num_bits=4096)
-    rows = man.collect()
-    assert rows[0]["num_bits"] == 4096 and len(rows[0]["bloom"]) == 512
-    assert len(bloom_pruned_files(man, 50)) == 1
 
 
 def test_auto_bloom_bits_caps_at_int32_safe_size():

@@ -1,12 +1,13 @@
 """Measures what the storage-pruning layer actually buys.
 
 Writes a z-ordered copy of lineitem (64 files, clustered on
-(l_extendedprice, l_orderkey % 4096)), then times three ways to answer a
-narrow range predicate and a point lookup:
+(l_extendedprice, l_orderkey % 4096)) as a catalog table with a stats
+manifest on l_extendedprice and a bloom manifest on l_orderkey, then times
+three ways to answer a narrow range predicate and a point lookup:
 
 * full scan + filter (what a naive reader pays),
-* manifest-pruned read (min/max boxes -> explicit file list),
-* bloom-pruned read (per-file blooms, equality only),
+* manifest-pruned ``Catalog.read`` (min/max boxes -> explicit file list),
+* bloom-pruned ``Catalog.read`` (per-file blooms, equality only),
 
 reporting wall seconds and the number of files each plan opened. The
 point at 100 TB: the pruned paths' cost tracks the SELECTED data, the
@@ -33,15 +34,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from lakehouse_architecture_spark.catalog import Catalog
 from lakehouse_architecture_spark.operators.partitioning import zordered_write
 from lakehouse_architecture_spark.session import SessionFactory
 from lakehouse_architecture_spark.sources.manifest import (
-    bloom_pruned_files,
-    bloom_pruned_read,
-    file_bloom_manifest,
-    file_manifest,
+    bloom_admitted_files,
     pruned_files,
-    pruned_read,
 )
 
 
@@ -72,7 +70,10 @@ def main() -> int:
             ).withColumn(
                 "l_orderkey", F.col("l_orderkey") * mult + F.col("__rep")
             ).drop("__rep")
-        path = os.path.join(work, "zli")
+        cat = Catalog(spark, work)
+        path = cat.define(
+            "zli", stats_cols=("l_extendedprice",), bloom_cols=("l_orderkey",)
+        ).path
         # zorder_cluster min-max scales dimensions into the Morton grid
         # itself; the key is mod-folded only to give the second dimension
         # bounded cardinality
@@ -80,15 +81,8 @@ def main() -> int:
         zordered_write(
             scaled, path, ["l_extendedprice", "okmod"], n_files=n_files, bits=10
         )
-        man = file_manifest(
-            spark, path, ["l_extendedprice"]
-        ).localCheckpoint(eager=True)
-        # num_bits=None: per-file AUTO sizing (~10 bits/key, the round-5
-        # default) — the measured-FPR probe below validates the sizing
-        # claim at whatever scale `mult` produces
-        bloom = file_bloom_manifest(
-            spark, path, "l_orderkey"
-        ).localCheckpoint(eager=True)
+        man = cat.manifest("zli")
+        bloom = cat.bloom_manifest("zli", "l_orderkey")
 
         lo, hi = 50_000.0, 52_000.0
 
@@ -98,7 +92,7 @@ def main() -> int:
             .count()
         )
         t_pruned, n_pruned = timed(
-            lambda: pruned_read(spark, path, man, "l_extendedprice", lo, hi).count()
+            lambda: cat.read("zli", where=("l_extendedprice", lo, hi)).count()
         )
         files_hit = len(pruned_files(man, "l_extendedprice", lo, hi))
         assert n_full == n_pruned, (n_full, n_pruned)
@@ -117,11 +111,9 @@ def main() -> int:
             .count()
         )
         t_bloom, n_bloom = timed(
-            lambda: bloom_pruned_read(
-                spark, path, bloom, "l_orderkey", key
-            ).count()
+            lambda: cat.read("zli", where=("l_orderkey", key, key)).count()
         )
-        bfiles = len(bloom_pruned_files(bloom, key))
+        bfiles = len(bloom_admitted_files(bloom, [key]))
         assert n_fulleq == n_bloom, (n_fulleq, n_bloom)
         print(json.dumps({
             "probe": "equality", "rows": n_fulleq, "n_files": n_files,
