@@ -85,8 +85,9 @@ def zorder_cluster(
     sort on the interleaved key, so a subsequent write's row-group stats
     are tight on every clustered column at once. The z column itself is
     dropped (it is derivable). Shared by :func:`zordered_write` and
-    ``VersionedTable.compact(zorder_by=...)`` so the clustering recipe
-    cannot drift between the two.
+    ``VersionedTable.compact(zorder_by=...)`` (which
+    ``VersionedTable.optimize(zorder_by=...)`` calls) so the clustering
+    recipe cannot drift between the two.
 
     Each dimension is MIN-MAX SCALED into the ``[0, 2**bits)`` Morton
     grid first (one stats aggregate over the input): ``zorder_value``
@@ -107,10 +108,10 @@ def zorder_cluster(
 
 def scaled_zorder_expr(df: DataFrame, zorder_cols: list[str], bits: int = 16):
     """Min-max-scaled Morton (Z-order) key expression over ``zorder_cols``
-    — the scaling half of :func:`zorder_cluster`, shared with
-    ``VersionedTable.optimize(zorder_by=...)`` (round 14) so the two
-    clustering recipes cannot drift. One driver-side 1-row stats fetch
-    (the grid bounds must be plan constants)."""
+    — the scaling half of :func:`zorder_cluster`, its one caller, so
+    every Z-order layout (``zordered_write``, ``VersionedTable.compact``
+    and ``optimize``) scales the same way. One driver-side 1-row stats
+    fetch (the grid bounds must be plan constants)."""
     stats = df.agg(
         *[F.min(F.col(c).cast("double")).alias(f"__lo_{c}") for c in zorder_cols],
         *[F.max(F.col(c).cast("double")).alias(f"__hi_{c}") for c in zorder_cols],

@@ -39,60 +39,41 @@ def compact_table(
     at 100 TB must never be a full-table rewrite.
 
     Round 14 (VERDICT r13 #3, closing the r12 seam): the rewrite is
-    PLAN-DRIVEN — the same ``compaction_assignments`` → broadcast-join →
-    ``partitionBy(bin)`` executor as :meth:`VersionedTable.optimize`
-    (:func:`pipeline.table_format.plan_tagged_bins` /
-    :func:`write_bins_flat`), replacing the size-blind ``coalesce``:
-    every plan bin becomes exactly one output file, and with ``order_col``
-    the bins are built in sort-key order (per-file MIN, in-plan) and
-    sorted within, so compacted files stay range-clusterable. A plain
-    coalesce instead merges files in arbitrary order — fine for file
-    COUNT, destructive for key clustering.
+    PLAN-DRIVEN — the same executor as :meth:`VersionedTable.optimize`,
+    :func:`pipeline.table_format.binned_rewrite`, replacing the
+    size-blind ``coalesce``: every plan bin becomes exactly one output
+    file, and with ``order_col`` the bins are built in sort-key order
+    (per-file MIN, in-plan) and sorted within, so compacted files stay
+    range-clusterable. A plain coalesce instead merges files in arbitrary
+    order — fine for file COUNT, destructive for key clustering.
     """
     import os
     import shutil
+    import uuid
 
     from lakehouse_architecture_spark.pipeline.table_format import (
-        plan_tagged_bins,
+        binned_rewrite,
         swap_in,
-        write_bins_flat,
     )
-    from lakehouse_architecture_spark.sources.manifest import data_files
 
-    def rewrite(src_dir: str, staging_dir: str) -> int:
-        """Plan + execute one directory's compaction into staging_dir;
-        returns the bin (== output file) count."""
-        # basenames are the bin-join key (plan_tagged_bins): two files in
-        # different subdirectories sharing a basename would silently
-        # collapse into ONE size entry and corrupt the plan — refuse loudly
-        # (round 15, ADVICE r14). Only the files Spark reads are listed, so
-        # a leftover _temporary/ copy never collides.
-        sizes: dict[str, int] = {}
-        for f in data_files(src_dir):
-            b = os.path.basename(f)
-            if b in sizes:
-                raise ValueError(
-                    f"compact_table: duplicate data-file basename {b!r} "
-                    f"under {src_dir} — nested layouts with colliding "
-                    "names cannot be planned by basename"
-                )
-            sizes[b] = os.path.getsize(f)
-        df = spark.read.parquet(src_dir)
-        tagged, n_bins = plan_tagged_bins(
-            spark, df, sizes, order_col, target_file_mb * 1024 * 1024
-        )
-        write_bins_flat(tagged, df.columns, staging_dir)
-        return n_bins
-
-    tmp = path.rstrip("/") + "__compacting"
+    target = path.rstrip("/")  # rename() rejects a trailing-slash target
+    # per-writer staging, like ManagedTable.merge: a leftover of a killed
+    # run is never mistaken for this run's output
+    tmp = f"{target}__compacting-{uuid.uuid4().hex[:12]}"
+    # (directory to rewrite, its staged copy) pairs; each is planned on its
+    # own and published with swap_in, so readers never see a
+    # half-compacted table and a crash mid-swap never deletes it
+    rewrites = [(target, tmp)]
     if partition_col and partitions is not None:
         # Partition-subset mode only makes sense on a Hive-layout table
         # (path/<col>=<value>/...). Rewrite JUST the selected partition
         # subdirectories and swap them one by one — partitions outside the
-        # subset are never read, rewritten, or deleted. Each partition is
-        # sized and rewritten independently: a single global coalesce over
-        # all selected partitions would make every task hold rows of every
-        # partition value, emitting up to n_files files PER partition.
+        # subset are never read, rewritten, or deleted. The partition
+        # column lives in the dir name, not the files, so each partition
+        # rewrites as a plain dir (a single global plan would put rows of
+        # every partition value in every task). swap_in parks the old copy
+        # as a "."-prefixed sibling, which Spark's listing skips: it never
+        # reads as an extra partition value, even after a crash mid-swap.
         for v in partitions:
             if not _PLAIN_PARTITION_VALUE.match(str(v)):
                 # Spark/Hive escape such values in directory names
@@ -102,32 +83,25 @@ def compact_table(
                     f"partition value {v!r} needs Hive path escaping; "
                     "compact the full table or rename the partition"
                 )
-        part_dirs = {
-            str(v): os.path.join(path, f"{partition_col}={v}") for v in partitions
-        }
-        present = {v: d for v, d in part_dirs.items() if os.path.isdir(d)}
-        if not present:
-            return 0
-        total_written = 0
-        for v, dest in present.items():
-            src = os.path.join(tmp, f"{partition_col}={v}")
-            # the partition column lives in the dir name, not the files, so
-            # each partition rewrites as a plain (unpartitioned) dir —
-            # plan + execute each partition independently (a single global
-            # plan would put rows of every partition value in every task)
-            total_written += rewrite(dest, src)
-            # swap_in parks the old copy as a "."-prefixed sibling inside
-            # the table dir, which Spark's listing skips: it never reads
-            # as an extra partition value, even after a crash mid-swap
-            swap_in(src, dest)
+        dirs = dict.fromkeys(f"{partition_col}={v}" for v in partitions)
+        rewrites = [
+            (os.path.join(target, d), os.path.join(tmp, d))
+            for d in dirs
+            if os.path.isdir(os.path.join(target, d))
+        ]
+    n_files = 0
+    try:
+        for src, staged in rewrites:
+            n_files += binned_rewrite(
+                spark.read.parquet(src),
+                src,
+                staged,
+                target_file_mb * 1024 * 1024,
+                order_col,
+            )
+            swap_in(staged, src)
+    finally:
         shutil.rmtree(tmp, ignore_errors=True)
-        return total_written
-
-    target = path.rstrip("/")  # rename() rejects a trailing-slash target
-    # stage to a temp sibling then swap_in — readers never see a
-    # half-compacted table, and a crash mid-swap never deletes it
-    n_files = rewrite(target, tmp)
-    swap_in(tmp, target)
     return n_files
 
 

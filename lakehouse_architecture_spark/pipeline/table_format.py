@@ -35,6 +35,14 @@ overwrites ``scheme://`` paths after truncating lineage instead, and a
 Hadoop-FileSystem commit is the planned replacement. ``VersionedTable``
 additionally owns what it writes next to its data (``_schema.json``,
 ``_changes/``, the ``_epoch`` marker) and how those are read back.
+
+Staging names are per writer: ``<path>__merging-<token>`` (merge),
+``<path>__compacting-<token>`` (compaction) and ``.v=<n>__tmp-<token>``
+inside a ``VersionedTable`` root, where the leading "." keeps a crashed
+commit out of the full-history read of the root. Every byte count and
+size manifest lists through ``sources.manifest.data_files``, the files
+Spark reads. :func:`binned_rewrite` is the one compaction executor
+(``compact_table`` and ``VersionedTable.optimize``).
 """
 
 from __future__ import annotations
@@ -51,6 +59,7 @@ from pyspark.sql.types import StructType
 from lakehouse_architecture_spark.materialize import truncate_lineage
 
 from lakehouse_architecture_spark.operators.upsert import merge_upsert
+from lakehouse_architecture_spark.sources.manifest import data_files
 
 
 def swap_in(staged: str, target: str) -> None:
@@ -105,21 +114,6 @@ def _stash(path: str, value) -> None:
         json.dump(value, f)
 
 
-def _data_bytes(d: str) -> int:
-    """Bytes of the data files under ``d``: "_"/"."-prefixed files
-    (stashes, markers, checksums) and "_"-prefixed subtrees (a snapshot's
-    ``_changes``) are not data."""
-    total = 0
-    for root, dirs, files in os.walk(d):
-        dirs[:] = [x for x in dirs if not x.startswith("_")]
-        total += sum(
-            os.path.getsize(os.path.join(root, f))
-            for f in files
-            if not f.startswith(("_", "."))
-        )
-    return total
-
-
 def plan_tagged_bins(
     spark: SparkSession,
     snapshot: DataFrame,
@@ -128,8 +122,7 @@ def plan_tagged_bins(
     target_bytes: int,
 ) -> tuple[DataFrame, int]:
     """Tag every snapshot row with its source file's compaction bin —
-    the shared plan-construction core of :meth:`VersionedTable.optimize`
-    and :func:`pipeline.maintenance.compact_table` (round 14, VERDICT
+    the planning half of :func:`binned_rewrite` (round 14, VERDICT
     r13 #2/#3). The assignments ride a BROADCAST JOIN on file name, never
     a per-file literal map (a 100k-file manifest would otherwise put 200k
     arguments into the expression tree), and the per-file MIN(order_col)
@@ -221,28 +214,52 @@ def plan_tagged_bins(
     return tagged, n_bins
 
 
-def write_bins_flat(tagged: DataFrame, cols: list[str], out_dir: str) -> None:
-    """Execute a :func:`plan_tagged_bins` work list: write ``partitionBy
-    (__bin)`` to a staging sibling — each bin directory then holds that
-    bin's single data file — and move the files FLAT into ``out_dir``
-    (the bin tag lives in the directory name, never in the parquet bytes,
-    so the table schema is unchanged). One Spark job plus
-    bin-cardinality driver renames."""
-    import glob
-
-    staging = out_dir.rstrip("/") + "__opt"
+def binned_rewrite(
+    snapshot: DataFrame,
+    src_dir: str,
+    out_dir: str,
+    target_bytes: int,
+    order_col: str | None,
+) -> int:
+    """Rewrite ``snapshot`` (the rows of ``src_dir``) into the NEW
+    directory ``out_dir``, one file per :func:`plan_tagged_bins` bin;
+    returns the bin count. The size manifest is ``data_files(src_dir)``,
+    the files Spark reads. The bins are written ``partitionBy(__bin)``
+    to a hidden ``_bins/`` inside ``out_dir`` and each bin's file is
+    moved flat into ``out_dir`` (the bin tag lives in the directory
+    name, never in the parquet bytes, so the schema is unchanged). One
+    Spark job plus bin-cardinality driver renames."""
+    # basenames are the bin-join key: two files in different
+    # subdirectories sharing a basename would silently collapse into ONE
+    # size entry and corrupt the plan — refuse loudly (round 15, ADVICE
+    # r14)
+    sizes: dict[str, int] = {}
+    for f in data_files(src_dir):
+        b = os.path.basename(f)
+        if b in sizes:
+            raise ValueError(
+                f"duplicate data-file basename {b!r} under {src_dir} — "
+                "nested layouts with colliding names cannot be planned by "
+                "basename"
+            )
+        sizes[b] = os.path.getsize(f)
+    tagged, n_bins = plan_tagged_bins(
+        snapshot.sparkSession, snapshot, sizes, order_col, target_bytes
+    )
+    # a writer's own directory: a leftover of a killed run is never
+    # merged into this one's output
+    os.makedirs(out_dir)
+    staging = os.path.join(out_dir, "_bins")
     try:
-        tagged.select(*cols, "__bin").write.mode("overwrite").partitionBy(
+        tagged.select(*snapshot.columns, "__bin").write.partitionBy(
             "__bin"
         ).parquet(staging)
-        os.makedirs(out_dir, exist_ok=True)
-        for bdir in sorted(glob.glob(os.path.join(staging, "__bin=*"))):
-            b = int(bdir.rsplit("=", 1)[1])
-            parts = sorted(glob.glob(os.path.join(bdir, "*.parquet")))
-            for j, p in enumerate(parts):
-                os.rename(p, os.path.join(out_dir, f"bin-{b:05d}-{j}.parquet"))
+        for j, f in enumerate(data_files(staging)):
+            b = int(os.path.basename(os.path.dirname(f)).split("=", 1)[1])
+            os.rename(f, os.path.join(out_dir, f"bin-{b:05d}-{j}.parquet"))
     finally:
         shutil.rmtree(staging, ignore_errors=True)
+    return n_bins
 
 
 def delta_available() -> bool:
@@ -383,8 +400,9 @@ class VersionedTable:
     right for dimension/gold tables, honest about not being file-level).
 
     Layout: ``<path>/v=<n>/`` per version. A version EXISTS iff its
-    directory rename committed — the tmp-dir is invisible to readers, so
-    a crashed writer leaves either no new version or a complete one,
+    directory rename committed — the staging dir
+    ``.v=<n>__tmp-<token>`` is hidden from readers (of ``<path>`` too),
+    so a crashed writer leaves either no new version or a complete one,
     never a torn read (POSIX rename atomicity; on an object store use the
     delta branch of ManagedTable instead).
 
@@ -435,11 +453,14 @@ class VersionedTable:
         """On-disk data bytes of the latest version (0 when the table is
         empty) — a driver-side stat, no Spark job."""
         v = self.latest_version()
-        return 0 if v is None else _data_bytes(self._vdir(v))
+        if v is None:
+            return 0
+        return sum(map(os.path.getsize, data_files(self._vdir(v))))
 
     def feed_bytes(self, version: int) -> int:
         """On-disk data bytes of ``version``'s change feed (0 if none)."""
-        return _data_bytes(os.path.join(self._vdir(version), "_changes"))
+        feed = os.path.join(self._vdir(version), "_changes")
+        return sum(map(os.path.getsize, data_files(feed)))
 
     def _reader(self, stash: str, key: str | None = None):
         """``spark.read`` with a schema stashed by :meth:`_commit` applied,
@@ -470,18 +491,16 @@ class VersionedTable:
     def history(self) -> list[dict]:
         """One record per version: number, commit mtime, file count/bytes.
         Filesystem metadata only — no data scan."""
-        import glob
-
         out = []
         for v in self.versions():
             d = self._vdir(v)
-            files = glob.glob(os.path.join(d, "*.parquet"))
+            files = data_files(d)
             out.append(
                 {
                     "version": v,
                     "committed_at": os.path.getmtime(d),
                     "n_files": len(files),
-                    "bytes": sum(os.path.getsize(f) for f in files),
+                    "bytes": sum(map(os.path.getsize, files)),
                 }
             )
         return out
@@ -497,11 +516,12 @@ class VersionedTable:
         stage=None,
     ) -> int:
         # per-writer tmp dir: a shared name would let two racing writers
-        # overwrite each other's staged data before either renames
-        tmp = self._vdir(v) + f"__tmp-{uuid.uuid4().hex[:12]}"
+        # overwrite each other's staged data before either renames; the
+        # "." keeps a crashed writer's rows out of a read of self.path
+        tmp = os.path.join(self.path, f".v={v}__tmp-{uuid.uuid4().hex[:12]}")
         if stage is not None:
             # custom staging (optimize(): bin-exact file layout); the
-            # callable must leave parquet files of df's schema in tmp —
+            # callable must create tmp holding parquet files of df's schema —
             # everything after (constraints on staged bytes, schema stash,
             # atomic rename, race detection) is shared with the df path
             stage(tmp)
@@ -717,7 +737,8 @@ class VersionedTable:
         non-negative integer columns (operators/partitioning.zorder_value),
         so the compacted snapshot's row-group min/max stats are tight on
         EVERY clustered column — one shuffle, paid once per maintenance
-        run, amortized across all future pruned scans."""
+        run, amortized across all future pruned scans.
+        ``optimize(zorder_by=...)`` rewrites through here too."""
         latest = self.latest_version()
         if latest is None:
             raise FileNotFoundError(f"{self.path}: nothing to compact")
@@ -741,84 +762,49 @@ class VersionedTable:
     ) -> tuple[int, int]:
         """Plan-DRIVEN OPTIMIZE (round 13, VERDICT r12 #3): run
         operators/partitioning.compaction_assignments over the latest
-        snapshot's file manifest and execute that exact plan — every bin
-        becomes exactly ONE output file, committed as a new version (time
-        travel over older versions untouched; reclaim with vacuum()).
-        Returns (new_version, n_bins).
+        snapshot's file manifest and execute that exact plan through
+        :func:`binned_rewrite` — every bin becomes exactly ONE output
+        file, committed as a new version (time travel over older versions
+        untouched; reclaim with vacuum()). Returns (new_version, n_bins).
 
-        Unlike :meth:`compact` (a size-blind coalesce), the rewrite here
-        is the work list the planner emitted: files are binned by
-        running-sum in ``order_col`` order (per-file MIN of the column,
-        one column-pruned scan at manifest cardinality; file-name order
-        when ``order_col`` is None), so compacted files stay
-        range-clusterable on the table's sort key. Execution shape:
-        rows are tagged with their file's bin by BROADCAST-JOINING the
-        assignments DataFrame on file name (round 14, VERDICT r13 #2 —
-        the previous manifest-cardinality ``create_map`` literal put two
-        plan-tree arguments per file into the expression tree, poison at
-        a 100k-file snapshot; the per-file MIN(order_col) likewise stays
-        in-plan instead of being collected), hash-repartitioned on the
-        bin (all of a bin's rows land in one task), sorted within the bin
-        on ``order_col``, and written ``partitionBy(bin)`` to staging —
-        each bin directory then holds that bin's single data file, which
-        is moved flat into the version directory (the bin tag lives in
-        the directory name, never in the parquet bytes, so the snapshot
-        schema is unchanged). The only driver fetch from the plan is the
-        scalar bin count (``repartition`` needs an int); file sizes come
-        from local fs metadata, manifest-cardinality by nature.
+        Unlike :meth:`compact` (a size-blind coalesce), files are binned
+        by running-sum in ``order_col`` order (per-file MIN of the column,
+        in-plan; file-name order when ``order_col`` is None) and sorted
+        within the bin, so compacted files stay range-clusterable on the
+        table's sort key.
+
+        ``zorder_by`` (round 14) is Delta's OPTIMIZE ZORDER: Z-ordering
+        fragments written round-robin needs a global re-cluster, not a
+        file-preserving merge, so the byte total only sizes the file count
+        and the rewrite is ``compact(n_bins, zorder_by, zorder_bits)``.
         """
-        import glob
-
         latest = self.latest_version()
         if latest is None:
             raise FileNotFoundError(f"{self.path}: nothing to optimize")
         vdir = self._vdir(latest)
-        sizes = {
-            os.path.basename(p): os.path.getsize(p)
-            for p in glob.glob(os.path.join(vdir, "*.parquet"))
-        }
-        if not sizes:
+        files = data_files(vdir)
+        if not files:
             raise FileNotFoundError(f"{self.path}: v{latest} has no data files")
         if order_col is not None and zorder_by is not None:
             raise ValueError("pass order_col OR zorder_by, not both")
-        snapshot = self.read(latest)
-        cols = snapshot.columns
         if zorder_by is not None:
-            # round 14: Z-ORDER OPTIMIZE. Unlike the order_col path — a
-            # file-PRESERVING merge that can only keep clustering the
-            # files already have — Z-ordering fragments that were written
-            # round-robin requires a global re-cluster, so this branch is
-            # a one-shuffle REWRITE (exactly Delta's OPTIMIZE ZORDER
-            # semantics): the byte plan sizes the output file count, then
-            # zorder_cluster range-partitions + sorts on the min-max-
-            # scaled Morton key (the same recipe compact(zorder_by=...)
-            # uses, so the two cannot drift). Every output file's z-range
-            # is disjoint — row-group min/max stay tight on EVERY
-            # clustered column at once; the key never reaches the parquet
-            # bytes.
             import math
 
-            from lakehouse_architecture_spark.operators.partitioning import (
-                zorder_cluster,
-            )
-
-            n_bins = max(1, math.ceil(sum(sizes.values()) / target_bytes))
-            clustered = zorder_cluster(
-                snapshot, list(zorder_by), n_bins, zorder_bits
-            )
-            return self._commit(clustered.select(*cols), latest + 1), n_bins
-        tagged, n_bins = plan_tagged_bins(
-            self.spark, snapshot, sizes, order_col, target_bytes
-        )
+            total = sum(map(os.path.getsize, files))
+            n_bins = max(1, math.ceil(total / target_bytes))
+            return self.compact(n_bins, zorder_by, zorder_bits), n_bins
+        snapshot = self.read(latest)
+        n_bins = 0
 
         def stage(tmp: str) -> None:
-            write_bins_flat(tagged, cols, tmp)
+            nonlocal n_bins
+            n_bins = binned_rewrite(snapshot, vdir, tmp, target_bytes, order_col)
 
         return self._commit(snapshot, latest + 1, stage=stage), n_bins
 
     def vacuum(self, keep_last: int = 1, tmp_min_age_s: float = 3600.0) -> list[int]:
         """Drop all but the newest ``keep_last`` versions (and crashed
-        ``__tmp`` leftovers); returns the versions removed.
+        ``.v=<n>__tmp-<token>`` leftovers); returns the versions removed.
 
         A tmp dir is only 'crashed' if it is OLD: an age gate
         (``tmp_min_age_s``, Delta-VACUUM-style retention) keeps a
@@ -833,7 +819,7 @@ class VersionedTable:
         for v in drop:
             shutil.rmtree(self._vdir(v))
         now = time.time()
-        for tmp in glob.glob(os.path.join(self.path, "v=*__tmp*")):
+        for tmp in glob.glob(os.path.join(self.path, ".v=*__tmp*")):
             try:
                 age = now - os.path.getmtime(tmp)
             except OSError:

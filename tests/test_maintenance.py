@@ -44,7 +44,7 @@ def test_compact_table_failed_swap_keeps_table(spark, tmp_path, monkeypatch):
     real_rename = os.rename
 
     def rename(src, dst):
-        # per-file moves (write_bins_flat) pass; directory renames fail
+        # per-file moves (binned_rewrite) pass; directory renames fail
         if os.path.isdir(src):
             raise OSError("injected directory rename failure")
         return real_rename(src, dst)
@@ -54,7 +54,30 @@ def test_compact_table_failed_swap_keeps_table(spark, tmp_path, monkeypatch):
         compact_table(spark, path, target_file_mb=128)
     monkeypatch.undo()
     assert sorted(r["id"] for r in spark.read.parquet(path).collect()) == list(range(6))
-    assert not os.path.exists(path + "__compacting")
+    assert not glob.glob(path + "__compacting*")
+
+
+@pytest.mark.parametrize("mode", ["full", "partition"])
+def test_compact_table_ignores_stale_staging_dir(spark, tmp_path, mode):
+    """A killed compaction leaves its staging directory behind. The next
+    run stages in its own directory, so the leftover's rows never reach
+    the compacted table."""
+    path = str(tmp_path / "t")
+    for p in (1, 2):
+        for i in range(4):
+            spark.range(5).selectExpr(f"id + {20 * p + 5 * i} AS id").withColumn(
+                "p", F.lit(p)
+            ).coalesce(1).write.mode("append").partitionBy("p").parquet(path)
+    stale = spark.range(1000, 1010).coalesce(1)
+    if mode == "full":
+        stale.withColumn("p", F.lit(1)).write.parquet(path + "__compacting")
+        kwargs = {}
+    else:
+        stale.write.parquet(os.path.join(path + "__compacting", "p=1"))
+        kwargs = {"partition_col": "p", "partitions": [1]}
+    compact_table(spark, path, target_file_mb=128, **kwargs)
+    ids = sorted(r["id"] for r in spark.read.parquet(path).collect())
+    assert ids == list(range(20, 60))
 
 
 @pytest.mark.parametrize("rollback_fails", [False, True], ids=["rollback", "crash"])
@@ -77,7 +100,7 @@ def test_compact_partition_subset_failed_swap_adds_no_partition(
     dir_renames = []
 
     def rename(src, dst):
-        # per-file moves (write_bins_flat) pass; the first directory
+        # per-file moves (binned_rewrite) pass; the first directory
         # rename (old partition aside) passes, later ones fail
         if os.path.isdir(src):
             dir_renames.append(src)

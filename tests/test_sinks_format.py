@@ -8,6 +8,7 @@ from pyspark.sql import types as T
 
 from lakehouse_architecture_spark.pipeline.table_format import (
     ManagedTable,
+    VersionedTable,
     publish_once,
     resolve_format,
 )
@@ -239,16 +240,66 @@ def test_versioned_table_time_travel_and_vacuum(spark, tmp_path):
     # crashed-writer leftovers are invisible and vacuumed — but only once
     # OLD (the age gate protects an in-flight writer's staging dir)
     import os
-    os.makedirs(str(tmp_path / "vt" / "v=2__tmp"))
+    os.makedirs(str(tmp_path / "vt" / ".v=2__tmp-crashed"))
     assert t.latest_version() == 1
     removed = t.vacuum(keep_last=1)  # default age gate: fresh tmp survives
     assert removed == [0] and t.versions() == [1]
-    assert os.path.exists(str(tmp_path / "vt" / "v=2__tmp"))
+    assert os.path.exists(str(tmp_path / "vt" / ".v=2__tmp-crashed"))
     assert t.vacuum(keep_last=1, tmp_min_age_s=0.0) == []
-    assert not os.path.exists(str(tmp_path / "vt" / "v=2__tmp"))
+    assert not os.path.exists(str(tmp_path / "vt" / ".v=2__tmp-crashed"))
     import pytest as _pytest
     with _pytest.raises(FileNotFoundError):
         t.read(0)
+
+
+def test_versioned_table_crashed_commit_hidden_from_history_read(
+    spark, tmp_path, monkeypatch
+):
+    """A commit that dies after staging and before its rename leaves the
+    staged copy inside the table root. The full-history read of the root
+    must not see it: still 5 rows and an int ``v``, not an extra partition
+    value. vacuum removes it once the age gate allows."""
+    from lakehouse_architecture_spark.pipeline import table_format
+
+    root = str(tmp_path / "vt")
+    t = VersionedTable(spark, root, keys=["k"])
+    t.write(spark.createDataFrame([(1, "a"), (2, "b")], ["k", "val"]))
+    t.merge(spark.createDataFrame([(2, "B"), (3, "c")], ["k", "val"]))
+
+    def crash(staged, target):
+        raise RuntimeError("writer killed before publishing")
+
+    monkeypatch.setattr(table_format, "publish_once", crash)
+    with pytest.raises(RuntimeError, match="killed"):
+        t.write(spark.createDataFrame([(4, "d"), (5, "e"), (6, "f")], ["k", "val"]))
+    monkeypatch.undo()
+    staged = [d for d in os.listdir(root) if d not in ("v=0", "v=1")]
+    assert len(staged) == 1
+    hist = spark.read.parquet(root)
+    assert hist.count() == 5
+    assert dict(hist.dtypes)["v"] == "int"
+    assert t.versions() == [0, 1]
+    assert t.vacuum(keep_last=2, tmp_min_age_s=0) == []
+    assert sorted(os.listdir(root)) == ["v=0", "v=1"]
+
+
+def test_versioned_table_byte_counts_follow_spark_listing(spark, tmp_path):
+    """snapshot_bytes and history count the files Spark reads: a
+    "."-parked copy inside the version directory is not data."""
+    import shutil
+
+    from lakehouse_architecture_spark.sources.manifest import data_files
+
+    t = VersionedTable(spark, str(tmp_path / "vt"), keys=["k"])
+    t.write(spark.createDataFrame([(1, "a"), (2, "b")], ["k", "val"]).coalesce(1))
+    vdir = t._vdir(t.latest_version())
+    live = data_files(vdir)
+    os.makedirs(os.path.join(vdir, ".parked"))
+    shutil.copy(live[0], os.path.join(vdir, ".parked", os.path.basename(live[0])))
+    expected = sum(os.path.getsize(f) for f in live)
+    assert data_files(vdir) == live
+    assert t.history()[-1]["bytes"] == expected
+    assert t.snapshot_bytes() == expected
 
 
 def test_versioned_table_commit_race_loser_detected(spark, tmp_path):
@@ -271,7 +322,7 @@ def test_versioned_table_commit_race_loser_detected(spark, tmp_path):
         t._commit(df_b, 0)
     assert sorted((r.k, r.val) for r in t.read(0).collect()) == [(1, "a")]
     # no stranded tmp dirs
-    assert not [d for d in os.listdir(str(tmp_path / "vt")) if "__tmp" in d]
+    assert os.listdir(str(tmp_path / "vt")) == ["v=0"]
 
 
 def test_versioned_table_compact_zorder_tightens_stats(spark, tmp_path):
